@@ -418,15 +418,8 @@ def q25_embedding_norms(spark, sf_dir):
 
 def q26_embedding_neardup(spark, sf_dir):
     """Banded multi-table LSH near-dup pairs (bounded buckets — the scale path)."""
-    from crawlingathome_worker_spark.operators.similarity import (
-        knn_self_join,
-        release_knn_caches,
-    )
+    from crawlingathome_worker_spark.operators.similarity import knn_self_join
 
-    # prior invocations' banded caches are safe to drop by now (their results
-    # were collected before this call) — without this, a long-running driver
-    # session accumulates one persisted banded frame per knn_self_join call
-    release_knn_caches()
     e = _par(_t(spark, sf_dir, "embeddings"), "vec_id")
     out = knn_self_join(e, threshold=0.4, n_tables=4, bits_per_table=6, dim=64)
     return out.select("id_a", "id_b", (F.round("cosine", 3) + F.lit(0.0)).alias("cosine"))
@@ -479,7 +472,7 @@ def q29_clip_scores(spark, sf_dir):
 
 
 def q31_phash_near_pairs(spark, sf_dir):
-    """Banded-hamming pHash near-duplicate image pairs (JVM-side banding)."""
+    """Banded-hamming pHash near-duplicate image pairs (bucket-local pair stage)."""
     from crawlingathome_worker_spark.operators.fetch import with_decoded
     from crawlingathome_worker_spark.operators.imagededup import phash_near_pairs
 

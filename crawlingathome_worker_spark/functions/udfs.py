@@ -91,16 +91,15 @@ def clip_proxy_score(img_feat: np.ndarray, txt_feat: np.ndarray) -> float:
 
 @pandas_udf(FloatType())
 def clip_score_udf(img_feat: pd.Series, txt_feat: pd.Series) -> pd.Series:
-    """Batched cosine: stacks each Arrow batch into (n,64) matrices — one numpy
-    einsum per batch, no per-row math."""
-    if len(img_feat) == 0:
-        return pd.Series([], dtype="float32")
-    a = np.array(
-        [x if x is not None else np.zeros(_DIM, dtype=np.float32) for x in img_feat],
-        dtype=np.float32,
+    """Per-row `clip_proxy_score` over float32 features (a null side scores 0).
+    One formula everywhere: a batched einsum sums in a different order than
+    np.dot and drifts by a few ulps, enough to flip a rounded score."""
+    return pd.Series(
+        [
+            clip_proxy_score(np.asarray(a, np.float32), np.asarray(b, np.float32))
+            if a is not None and b is not None
+            else 0.0
+            for a, b in zip(img_feat, txt_feat)
+        ],
+        dtype="float32",
     )
-    b = np.array(
-        [x if x is not None else np.zeros(_DIM, dtype=np.float32) for x in txt_feat],
-        dtype=np.float32,
-    )
-    return pd.Series(np.einsum("ij,ij->i", a, b).astype(np.float32))

@@ -126,7 +126,7 @@ def with_decoded_and_scored(
     → text_feature_udf → clip_score_udf this removes two ArrowEvalPython stage
     barriers per wave — per-stage latency is the constant that caps small-wave
     scaling (BENCH/BASELINE.md)."""
-    from ..functions.udfs import text_feature
+    from ..functions.udfs import clip_proxy_score, text_feature
 
     @F.pandas_udf(_DECODE_SCORE_STRUCT)
     def decode_score_udf(col: pd.Series, caps: pd.Series) -> pd.DataFrame:
@@ -152,7 +152,7 @@ def with_decoded_and_scored(
             feat[i] = fv.tolist()
             cap = caps.iat[i]
             if cap is not None:
-                score[i] = float(fv @ text_feature(cap))
+                score[i] = clip_proxy_score(fv, text_feature(cap))
         return pd.DataFrame(
             {
                 "w_dec": pd.array(w, dtype="int32"),

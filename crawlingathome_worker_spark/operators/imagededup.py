@@ -6,17 +6,20 @@ the north_star mandates pHash dedup as a pipeline stage. Two tiers:
 - `phash_dedup`: exact-pHash first-wins (hash-partitioned window; identical
   images and re-encodes collapse — our near-dup fixtures land here since a ±1
   pixel perturbation rarely moves any DCT bit).
-- `phash_near_pairs`: hamming-≤k candidate pairs via 4×16-bit banding (same
-  pigeonhole argument as SimHash: ham ≤ 3 ⇒ some band equal), verified with
-  bit_count — JVM-side end to end, no UDF. At 100 TB this is the only viable
-  shape: band equality is an equi-join key, so candidates co-locate in one
-  shuffle instead of an all-pairs comparison.
+- `phash_near_pairs`: hamming-≤k pairs via 4×16-bit banding (same pigeonhole
+  argument as SimHash: ham ≤ 3 ⇒ some band equal). pHash is a 64-bit hash with
+  a hamming radius, exactly like SimHash, so it runs the same bucket-local
+  pair stage (operators/bucketpairs.py): one shuffle on the band key, then
+  XOR + popcount verification inside each bucket — never an all-pairs
+  comparison.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .bucketpairs import hamming_pairs
 
 
 def phash_dedup(df: DataFrame, order_col: str = "sample_id") -> DataFrame:
@@ -28,34 +31,8 @@ def phash_dedup(df: DataFrame, order_col: str = "sample_id") -> DataFrame:
 def phash_near_pairs(
     df: DataFrame, id_col: str = "image_id", max_hamming: int = 3
 ) -> DataFrame:
-    """→ (id_a, id_b, hamming ≤ max_hamming) near-duplicate image pairs.
-
-    Bands are derived from the radius ((max_hamming + 1) bit-bands, pigeonhole)
-    so candidate recall is complete for any requested hamming distance."""
-    from .textdedup import hash64_band_chunks
-
-    bands = df.select(
-        F.col(id_col),
-        F.col("phash"),
-        F.posexplode(F.array(*hash64_band_chunks("phash", max_hamming))).alias(
-            "band", "chunk"
-        ),
-    )
-    l, r = bands.alias("l"), bands.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.phash").alias("ph_a"),
-            F.col("r.phash").alias("ph_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).alias("hamming")
-    return cand.select("id_a", "id_b", ham).filter(F.col("hamming") <= max_hamming)
+    """→ (id_a, id_b, hamming ≤ max_hamming) near-duplicate image pairs,
+    id_a < id_b. The same banded hamming stage as simhash_near_pairs over the
+    `phash` column: (max_hamming + 1) pigeonhole bands, so candidate recall is
+    complete for any requested hamming distance."""
+    return hamming_pairs(df, id_col, "phash", max_hamming, ("id_a", "id_b", "hamming"))

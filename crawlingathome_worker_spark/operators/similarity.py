@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
+from .bucketpairs import PairKernel, bucket_pairs
+
 __all__ = [
     "with_cosine",
     "brute_force_topk",
@@ -354,7 +356,10 @@ def banded_lsh_signatures(
         )
         return pd.Series(list(sigs))
 
-    return df.withColumn("sigs", sigs_udf(F.col(vec_col)))
+    # nondeterministic only to pin the UDF in place: a posexplode over `sigs`
+    # makes Catalyst infer size(sigs) > 0 and push it (with a second copy of
+    # the UDF) below the caller's repartition — marked, it runs once
+    return df.withColumn("sigs", sigs_udf.asNondeterministic()(F.col(vec_col)))
 
 
 def knn_self_join(
@@ -367,135 +372,45 @@ def knn_self_join(
     id_col: str = "vec_id",
     max_bucket_rows: int | None = None,
     dim: int | None = None,
-    score_before_collapse: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: banded multi-table LSH candidates,
     exact cosine only within (table, signature) buckets. → (id_a, id_b, cosine
     ≥ threshold), id_a < id_b.
 
-    Scale shape (round-6 bucket-local executor): rows shuffle ONCE on the
-    (band, sig) bucket key into a grouped Arrow stage; all pairing and scoring
-    happens inside the bucket task with numpy (chunked gemm prefilter at
-    threshold−1e-6, then an exact einsum re-score that reproduces the legacy
-    per-pair formula bit-for-bit). Only threshold-SURVIVING pairs ever leave
-    the task, so the cross-band duplicate collapse shuffles three scalars per
-    survivor instead of two vectors per raw banded candidate — the previous
-    self-join shape materialized the full quadratic candidate set (~n²/2^bits
-    rows carrying both embeddings) through the join and the dedup exchange,
-    which at 20k vectors × 6 bits was an ~85 s stage; this shape is ~2 s.
-    `max_bucket_rows` hard-caps pathological buckets (near-constant embedding
-    regions) by dropping buckets denser than the cap inside the bucket task —
-    same drop semantics as the previous aggregate+anti-join, zero extra passes.
-    Pass `dim` (the embedding width) to avoid a probe job on `df`.
-    `score_before_collapse` is retained for API compatibility: the bucket-local
-    executor already scores before the collapse and shuffles survivors only,
-    subsuming both historical placements (identical result set either way)."""
-    from pyspark.sql.types import StructField, StructType
-
+    Pairing and scoring run bucket-locally (operators/bucketpairs.py): a
+    chunked gemm prefilter at threshold−1e-6, then an exact einsum re-score
+    that reproduces the per-pair formula bit-for-bit, so only threshold
+    survivors leave the task — never the quadratic candidate set with both
+    vectors. `max_bucket_rows` hard-caps pathological buckets (near-constant
+    embedding regions) by skipping buckets denser than the cap inside the
+    kernel. Pass `dim` (the embedding width) to avoid a probe job on `df`."""
     if dim is None:
         dim = len(df.select(vec_col).first()[vec_col])
     sigged = banded_lsh_signatures(df, dim, n_tables, bits_per_table, seed, vec_col)
     banded = sigged.select(id_col, vec_col, F.posexplode("sigs").alias("band", "sig"))
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("id_b", id_type),
-            StructField("cosine", DoubleType()),
-        ]
-    )
     thr = float(threshold)
-    cap = max_bucket_rows
     d = int(dim)
-    id_name, vec_name = id_col, vec_col
 
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {
-                "id_a": pdf[id_name].iloc[:0],
-                "id_b": pdf[id_name].iloc[:0],
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-        if n < 2 or (cap is not None and n > cap):
-            return empty
-        m = _stack(pdf[vec_name], d)
+    def prepare(vecs):
+        if max_bucket_rows is not None and len(vecs) > max_bucket_rows:
+            return None
+        m = _stack(vecs, d)
         norms = np.linalg.norm(m, axis=1)
         norms[norms == 0] = 1.0
-        nm = m / norms[:, None]
-        # chunked upper-triangle gemm PREFILTER with a safety margin (gemm and
-        # einsum round differently in the last ulps; 1e-6 ≫ the fp64 drift)
-        margin = thr - 1e-6
-        step = max(64, min(n, 4_000_000 // n))  # ≤ ~32 MB per score block
-        ii_parts: list[np.ndarray] = []
-        jj_parts: list[np.ndarray] = []
-        for s0 in range(0, n - 1, step):
-            sc = nm[s0 : min(n, s0 + step)] @ nm.T
-            li, lj = np.nonzero(sc >= margin)
-            keep = (li + s0) < lj  # strict upper triangle, global indices
-            ii_parts.append(li[keep] + s0)
-            jj_parts.append(lj[keep])
-        ii = np.concatenate(ii_parts) if ii_parts else np.array([], dtype=np.int64)
-        if len(ii) == 0:
-            return empty
-        jj = np.concatenate(jj_parts)
-        # EXACT re-score: identical arithmetic to the legacy pair_cos UDF
-        # (per-row einsum over float64 gathers, norms recomputed the same way)
-        a, b = m[ii], m[jj]
-        na, nb = norms[ii], norms[jj]
-        cos = np.einsum("ij,ij->i", a, b) / (na * nb)
-        exact = cos >= thr
-        if not exact.any():
-            return empty
-        ids = pdf[id_name].to_numpy()
-        ia, ib = ids[ii[exact]], ids[jj[exact]]
-        swap = ib < ia  # emit id_a < id_b like the legacy l.id < r.id join
-        id_a = np.where(swap, ib, ia)
-        id_b = np.where(swap, ia, ib)
-        distinct = id_a != id_b  # duplicate-id rows never paired (legacy strict <)
-        return pd.DataFrame(
-            {
-                "id_a": id_a[distinct],
-                "id_b": id_b[distinct],
-                "cosine": cos[exact][distinct],
-            }
-        )
+        return m, norms, m / norms[:, None]
 
-    out = (
-        banded.groupBy("band", "sig")
-        .applyInPandas(_bucket_pairs, schema=out_schema)
-        .dropDuplicates(["id_a", "id_b"])
+    def prefilter(x, s0, s1):
+        # safety margin: gemm and einsum round differently in the last ulps;
+        # 1e-6 ≫ the fp64 drift
+        nm = x[2]
+        return nm[s0:s1] @ nm[s0:].T >= thr - 1e-6
+
+    def score(x, ii, jj):
+        m, norms, _ = x
+        cos = np.einsum("ij,ij->i", m[ii], m[jj]) / (norms[ii] * norms[jj])
+        return cos, cos >= thr
+
+    kernel = PairKernel(prepare, prefilter, score, DoubleType())
+    return bucket_pairs(
+        banded, ["band", "sig"], id_col, vec_col, kernel, ("id_a", "id_b", "cosine")
     )
-    return out
-
-
-# Module-level registry of persisted banded frames. The round-6 bucket-local
-# knn_self_join consumes its banded frame exactly once (one grouped Arrow
-# stage), so it no longer persists anything and registers nothing here; the
-# registry and the release functions stay as API-compatible no-ops for callers
-# written against the join-based implementation (q26 calls release_knn_caches
-# defensively at the top of each invocation).
-_BANDED_CACHES: list[DataFrame] = []
-
-
-def unpersist_knn_cache(df: DataFrame | None = None) -> None:
-    """Release the banded-signature cache pinned by knn_self_join. With a
-    frame: releases that frame's cache if the handle survived (no-op
-    otherwise). With no argument: releases every registered cache."""
-    if df is None:
-        release_knn_caches()
-        return
-    cached = getattr(df, "_banded_cache", None)
-    if cached is not None:
-        cached.unpersist()
-        try:
-            _BANDED_CACHES.remove(cached)
-        except ValueError:
-            pass
-
-
-def release_knn_caches() -> None:
-    """Unpersist ALL banded caches created by knn_self_join in this session."""
-    while _BANDED_CACHES:
-        _BANDED_CACHES.pop().unpersist()

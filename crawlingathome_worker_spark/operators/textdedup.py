@@ -8,9 +8,9 @@ dedups URLs/pair-hashes). All designed for the 100 TB shape:
   hashing), then band-bucket EXPLODE + self-JOIN — candidate pairs only ever meet
   inside a (band, bucket) shuffle key, never an all-pairs crossjoin. Bucket join
   is the standard LSH scale path (SPARK MLlib MinHashLSH uses the same shape).
-- SimHash: 64-bit fingerprints, near-dup candidates via 4×16-bit band exact-match
-  join (two fingerprints within hamming ≤ 3 must share ≥1 of 4 bands — pigeonhole),
-  verified by exact hamming.
+- SimHash: 64-bit fingerprints, near-dup candidates inside 4×16-bit band buckets
+  (two fingerprints within hamming ≤ 3 must share ≥1 of 4 bands — pigeonhole),
+  verified by exact hamming in the shared bucket-local pair stage.
 - n-gram Jaccard: explode n-grams → pair intersection via equi-join on the gram →
   |A∩B|/(|A|+|B|-|A∩B|). Document-frequency pruning drops grams that appear in
   more than `max_df` docs (stopword-grams would otherwise quadratically blow up
@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from .bucketpairs import hamming_pairs, hash64_band_chunks  # noqa: F401 (re-exported)
 
 # ---------------------------------------------------------------------------
 # exact
@@ -213,138 +215,18 @@ def simhash_fingerprints(
     return docs.select(F.col(id_col), sim_udf(F.col(text_col)).alias("simhash"))
 
 
-def hash64_band_chunks(col: str, max_hamming: int) -> list:
-    """Split a 64-bit long column into (max_hamming + 1) bit-band chunk columns.
-
-    Pigeonhole guarantee: two hashes within hamming ≤ max_hamming differ in at
-    most max_hamming bands, so with max_hamming+1 bands at least one band is
-    EQUAL — band equality as an equi-join key has full recall for the radius.
-    Widths are 64 // nbands with the remainder spread over the low bands."""
-    nbands = max_hamming + 1
-    if nbands > 64:
-        raise ValueError(f"max_hamming={max_hamming} needs {nbands} bands > 64 bits")
-    base, extra = divmod(64, nbands)
-    chunks, start = [], 0
-    for b in range(nbands):
-        width = base + (1 if b < extra else 0)
-        # width 64 (radius 0 → single band): (1<<64)-1 overflows a JVM long;
-        # two's-complement all-ones is -1
-        mask = -1 if width >= 64 else (1 << width) - 1
-        chunks.append(F.shiftrightunsigned(col, start).bitwiseAND(F.lit(mask)))
-        start += width
-    return chunks
-
-
-def _popcount64(x: np.ndarray) -> np.ndarray:
-    """Vectorized population count over uint64 (SWAR; numpy<2 lacks
-    bitwise_count). Exact for all 64-bit values."""
-    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-    x = (x & np.uint64(0x3333333333333333)) + (
-        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-    )
-    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-
-
 def simhash_near_pairs(
     fps: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs by banded SimHash: (max_hamming + 1) bit-bands over the
     64-bit fingerprint; hamming ≤ max_hamming ⇒ at least one band equal
     (pigeonhole — full candidate recall for ANY radius, not just ≤ 3).
-    → (doc_a, doc_b, hamming).
+    → (doc_a, doc_b, hamming), doc_a < doc_b.
 
-    Round-6 bucket-local executor: rows shuffle ONCE on the (band, chunk)
-    bucket key; each task pairs and hamming-verifies inside its buckets with
-    vectorized numpy (XOR broadcast + SWAR popcount), emitting only
-    radius-surviving pairs. The previous band self-join materialized the full
-    quadratic candidate set through the join stage — 24.6M candidate rows at
-    50k sf1.0 docs, concentrated in a few hot 16-bit chunks, so single tasks
-    ground through millions of row pairs at JVM row-at-a-time speed. Here the
-    same hot bucket is one m×m uint64 matrix op (chunked to bound memory).
-    Result-identical: same candidate buckets (pigeonhole recall intact), same
-    integer hamming, same doc_a < doc_b orientation, duplicate collapse across
-    bands on the few survivors."""
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    id_type = fps.schema[id_col].dataType
-    bands = fps.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(F.array(*hash64_band_chunks("simhash", max_hamming))).alias(
-            "band", "chunk"
-        ),
-    )
-    out_schema = StructType(
-        [
-            StructField("doc_a", id_type),
-            StructField("doc_b", id_type),
-            StructField("hamming", IntegerType()),
-        ]
-    )
-    radius = int(max_hamming)
-    id_name = id_col
-    p = int(fps.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    def _pair_partition(batches):
-        # hash partitioning on exactly (band, chunk) co-locates each bucket in
-        # one partition, but a bucket may span Arrow batches — concat first
-        chunks_in = list(batches)
-        if not chunks_in:
-            return
-        pdf = pd.concat(chunks_in, ignore_index=True) if len(chunks_in) > 1 else chunks_in[0]
-        if len(pdf) < 2:
-            return
-        band = pdf["band"].to_numpy()
-        chunk = pdf["chunk"].to_numpy()
-        sh = pdf["simhash"].to_numpy().view(np.uint64)
-        ids = pdf[id_name].to_numpy()
-        order = np.lexsort((chunk, band))
-        band, chunk, sh, ids = band[order], chunk[order], sh[order], ids[order]
-        is_new = np.empty(len(band), dtype=bool)
-        is_new[0] = True
-        is_new[1:] = (band[1:] != band[:-1]) | (chunk[1:] != chunk[:-1])
-        starts = np.flatnonzero(is_new)
-        ends = np.append(starts[1:], len(band))
-        out_a, out_b, out_h = [], [], []
-        for s, e in zip(starts, ends):
-            m = e - s
-            if m < 2:
-                continue
-            g_sh = sh[s:e]
-            g_ids = ids[s:e]
-            step = max(64, min(m, 2_000_000 // m))  # ≤ ~16 MB per XOR block
-            for i0 in range(0, m - 1, step):
-                blk = g_sh[i0 : min(m, i0 + step)]
-                h = _popcount64(blk[:, None] ^ g_sh[None, :])
-                li, lj = np.nonzero(h <= radius)
-                keep = (li + i0) < lj  # strict upper triangle, global indices
-                if not keep.any():
-                    continue
-                li, lj = li[keep], lj[keep]
-                ia, ib = g_ids[li + i0], g_ids[lj]
-                swap = ib < ia  # emit doc_a < doc_b like the legacy l.id < r.id
-                a = np.where(swap, ib, ia)
-                b = np.where(swap, ia, ib)
-                distinct = a != b  # duplicate-id rows never pair (strict <)
-                out_a.append(a[distinct])
-                out_b.append(b[distinct])
-                out_h.append(h[li, lj][distinct].astype(np.int32))
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "doc_a": np.concatenate(out_a),
-                    "doc_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_h),
-                }
-            )
-
-    return (
-        bands.repartition(p, "band", "chunk")
-        .mapInPandas(_pair_partition, schema=out_schema)
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    Pairing and the hamming verify run bucket-locally (operators/bucketpairs.py:
+    XOR + SWAR popcount over one sorted (band, chunk) bucket at a time), so
+    only radius survivors reach the duplicate collapse."""
+    return hamming_pairs(fps, id_col, "simhash", max_hamming, ("doc_a", "doc_b", "hamming"))
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,8 @@ reference workflow lives in one repo:
   → caption near-dup collapse (MinHash-LSH, greedy keep-lowest)
   → CLIP-proxy score gate → final snapshot + stats row.
 
-Every stage is the scale shape used elsewhere: window dedup and banded
-equi-join candidates only — no all-pairs stage anywhere.
+Every stage is the scale shape used elsewhere: window dedup, bucket-local
+pHash pairing and a MinHash band equi-join — no all-pairs stage anywhere.
 """
 
 from __future__ import annotations

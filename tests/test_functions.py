@@ -71,3 +71,25 @@ def test_host_and_path():
     assert host_of("http://HOST07.Example.com/img/x.jpg") == "host07.example.com"
     assert path_of("http://h.com/img/x.jpg") == "/img/x.jpg"
     assert path_of("http://h.com") == "/"
+
+
+def test_clip_score_udf_is_the_per_row_dot():
+    """The UDF scores each row with clip_proxy_score (np.dot), the formula the
+    oracles use. A batched float32 einsum sums in another order and differs
+    by a few ulps on some pairs — enough to flip a 3-decimal rounding."""
+    import numpy as np
+    import pandas as pd
+
+    from crawlingathome_worker_spark.functions.udfs import clip_proxy_score, clip_score_udf
+
+    rng = np.random.default_rng(0)
+    a = rng.standard_normal((200, 64)).astype(np.float32)
+    b = rng.standard_normal((200, 64)).astype(np.float32)
+    a /= np.linalg.norm(a, axis=1, keepdims=True)
+    b /= np.linalg.norm(b, axis=1, keepdims=True)
+    want = np.array([clip_proxy_score(x, y) for x, y in zip(a, b)], dtype=np.float32)
+    assert (np.einsum("ij,ij->i", a, b) != want).any()  # the pairs tell the two apart
+    got = clip_score_udf.func(pd.Series(list(a)), pd.Series(list(b)))
+    assert got.dtype == np.float32 and np.array_equal(got.to_numpy(), want)
+    nulls = clip_score_udf.func(pd.Series([None, a[0]]), pd.Series([b[0], None]))
+    assert nulls.tolist() == [0.0, 0.0]

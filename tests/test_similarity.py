@@ -188,28 +188,3 @@ def test_recall_calibration_at_sf01(spark):
     }
     assert got_sh == want  # pigeonhole banding: complete AND exact
     assert len(want) > 0  # the fixture actually plants near-dups at this scale
-
-
-def test_knn_scoring_placement_variants_agree(spark, fx_dir):
-    """score_before_collapse=True (the network-bound-cluster shape: survivors-
-    only scalar shuffle) must produce the same pair set and cosines as the
-    collapse-first default — identical evaluations, different plan shape."""
-    import os
-
-    from crawlingathome_worker_spark.operators.similarity import (
-        knn_self_join,
-        release_knn_caches,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(threshold=0.4, n_tables=4, bits_per_table=6, dim=64)
-    a = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in knn_self_join(emb, **kw).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in knn_self_join(emb, score_before_collapse=True, **kw).collect()
-    }
-    release_knn_caches()
-    assert a == b and len(a) > 0

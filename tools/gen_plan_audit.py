@@ -22,9 +22,10 @@ ANNOTATIONS = {
     "q12_tpch_q5": "Fact-oriented join order (r6): orders probes broadcast(region⨝nation⨝customer), lineitem probes broadcast(supplier), one fact-fact join keys the two reduced streams — lineitem is never collected into a broadcast build (the old left-deep chain broadcast the 1.5M-row orders AND 6M-row lineitem scans via pruned-size estimates).",
     "q11_tpch_q3": "Dimension side broadcast (static 16 MB threshold + AQE runtime promotion, r6); TakeOrderedAndProject for the top-10 (no global sort).",
     "q20_minhash_lsh_pairs": "LSH band join: Exchange keyed (band, bucket) only — candidate pairs meet inside buckets, never via cartesian; the documents scan repartitions to session parallelism before the signature UDF (r6).",
-    "q21_simhash_pairs": "Pigeonhole banding (r+1 bands) as the ONE shuffle key; pairing + hamming verify run bucket-locally in a vectorized Arrow stage (XOR broadcast + SWAR popcount, r6) so only radius survivors reach the duplicate collapse — the former band self-join materialized the quadratic candidate set.",
+    "q21_simhash_pairs": "Pigeonhole banding (r+1 bands) as the ONE shuffle key: Exchange hashpartitioning(band, chunk, p) → Sort → MapInPandas, the shared bucket-local pair stage (operators/bucketpairs.py) — one sorted bucket at a time with a carried partial bucket, XOR + SWAR popcount verify — so a task holds one bucket plus one Arrow batch and only radius survivors reach the duplicate collapse; the simhash UDF runs once below the exchange.",
     "q23_ann_topk": "One gemv-per-Arrow-batch UDF + TakeOrderedAndProject: score 100 TB, keep k, no global sort shuffle.",
-    "q26_embedding_neardup": "Banded multi-table signatures exploded to (band, sig) — the ONE shuffle key; pairing + exact cosine run bucket-locally in a grouped Arrow stage (gemm prefilter + exact einsum re-score, r6) so only threshold survivors leave the task — the former self-join shuffled the quadratic candidate set with both vectors.",
+    "q26_embedding_neardup": "Banded multi-table signatures exploded to (band, sig) — the ONE shuffle key, into the same Sort → MapInPandas bucket-local pair stage as q21 (gemm prefilter + exact einsum re-score kernel) so only threshold survivors leave the task; the signature UDF is pinned (nondeterministic) so the size(sigs) > 0 filter Catalyst infers from the posexplode cannot re-run it below the repartition — exactly one ArrowEvalPython under the bucket exchange.",
+    "q31_phash_near_pairs": "pHash is a 64-bit hash with a hamming radius, so it runs q21's stage verbatim: Exchange hashpartitioning(band, chunk, p) → Sort → MapInPandas (XOR + SWAR popcount). No band self-join, so the decode UDF runs once and the duplicate collapse sees hamming survivors only.",
     "q35_ann_ivf": "Cell filter before the scorer: only n_probe cells' rows reach the cosine UDF (at rest: partition-pruned files, see test_multimodal).",
     "q48_tpch_q10": "4-table star: dims broadcast, fact shuffles once; top-20 via TakeOrderedAndProject, never a global sort.",
     "q49_tpch_q19": "OR-of-ANDs predicate evaluated in one codegen span over the broadcast join; part-side conjuncts prune the build side.",
