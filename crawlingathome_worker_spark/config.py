@@ -107,4 +107,3 @@ class EngineConfig:
     reference_strict: bool = False
     bloom: BloomParams = field(default_factory=BloomParams)
     cuckoo: CuckooParams = field(default_factory=CuckooParams)
-    shuffle_partitions: int = 32

@@ -27,6 +27,8 @@ matching the reference's pre-increment.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -38,12 +40,17 @@ def assign_sample_ids(
     order_cols: tuple[str, ...] = ("priority_key", "url"),
     id_col: str = "sample_id",
     num_partitions: int | None = None,
+    persist: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Add `id_col` = start_id + global rank (1-based) in order_cols order.
 
     The returned DataFrame is persisted (the range shuffle samples its input and
     monotonically_increasing_id is assignment-order-dependent; the persist pins
-    one deterministic materialization for all downstream actions).
+    one deterministic materialization for all downstream actions). `persist`,
+    when given, persists that frame instead and takes ownership of it — a
+    caller that owns its resources (run_wave's ledger) then releases it even
+    when this call fails after the persist; otherwise unpersist_sample_ids
+    releases it.
     """
     sess = df.sparkSession
     p = num_partitions or int(sess.conf.get("spark.sql.shuffle.partitions"))
@@ -53,8 +60,8 @@ def assign_sample_ids(
         .sortWithinPartitions(*cols)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    rdf = persist(rdf) if persist is not None else rdf.persist(StorageLevel.MEMORY_AND_DISK)
     stats = (
         rdf.groupBy("_pid")
         .agg(F.count(F.lit(1)).alias("_cnt"), F.min("_mid").alias("_mmin"))

@@ -295,3 +295,129 @@ def test_bloom_fill_recompute_only_at_compaction(spark, fx_dir, tmp_path_factory
     assert m3["tables"].get("bloom_parsed") != m1["tables"].get("bloom_parsed")
     state = wh.read_table(spark, m3, "bloom_parsed", "part int, bits binary")
     assert abs(bloom_fill_ratio(state, cfg.bloom) - f3) < 1e-6
+
+
+def _committed_wave(spark, fx_dir, tmp_path_factory, name):
+    """A bloom-mode warehouse with one committed wave (so a session cache);
+    → (wh, cfg, pairs, robots, links, ids after the wave, the cache's ids)."""
+    wh = Warehouse(str(tmp_path_factory.mktemp(name)))
+    cfg = EngineConfig(default_host_budget=5, wave_seconds=0.0, dedup_mode="bloom")
+    links = spark.read.parquet(f"{fx_dir}/wat_links.parquet")
+    pairs = spark.read.parquet(f"{fx_dir}/pairs.parquet")
+    robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
+    before = _persistent_ids(spark)
+    run_wave(
+        spark, wh, cfg, pairs, robots, links.filter(F.col("page_id") < 100),
+        collect_lineage=False, shard_key="a",
+    )
+    after = _persistent_ids(spark)
+    cache_ids = after - before
+    assert len(cache_ids) == 1
+    return wh, cfg, pairs, robots, links, after, cache_ids
+
+
+def test_lost_commit_race_releases_fold_and_cache(spark, fx_dir, tmp_path_factory):
+    """A wave whose commit loses the race (another writer linked the same
+    snapshot id first) discards its fold checkpoint and evicts the session
+    cache: the next wave reads the winner's snapshot, so the cache's key can
+    never hit again. In-process and in bloom mode, so a session cache and a
+    fold exist (the subprocess race test runs exact mode, which has neither)."""
+    import pytest
+
+    from crawlingathome_worker_spark.state.snapshots import ConcurrentCommitError
+
+    wh, cfg, pairs, robots, links, after_a, cache_ids = _committed_wave(
+        spark, fx_dir, tmp_path_factory, "race_wh"
+    )
+
+    def losing_commit(manifest):
+        raise ConcurrentCommitError(f"snapshot {manifest['snapshot_id']} already committed")
+
+    real_commit = wh.commit
+    wh.commit = losing_commit
+    try:
+        with pytest.raises(ConcurrentCommitError):
+            run_wave(
+                spark, wh, cfg, pairs, robots,
+                links.filter((F.col("page_id") >= 100) & (F.col("page_id") < 200)),
+                collect_lineage=False, shard_key="b",
+            )
+    finally:
+        wh.commit = real_commit
+
+    assert getattr(wh, "_bloom_session_cache", None) is None
+    now = _persistent_ids(spark)
+    assert now & cache_ids == frozenset(), "stale cache blocks still persisted"
+    assert now - after_a == frozenset(), f"lost race stranded {sorted(now - after_a)}"
+
+
+def test_prep_failure_releases_frames_and_evicts_cache(
+    spark, fx_dir, tmp_path_factory, monkeypatch
+):
+    """A wave that dies in prep, before any pool job, strands nothing: the
+    sample-id assignment is the wave's first job and it reads the cached
+    bloom through the seen gate, so cands, gated and the sample-id cache are
+    persisted by then — and its failure is a cache-reader failure, so the
+    session cache is evicted and its checkpoint blocks released."""
+    import pytest
+
+    from crawlingathome_worker_spark.plans import wave as wave_mod
+
+    wh, cfg, pairs, robots, links, after_a, cache_ids = _committed_wave(
+        spark, fx_dir, tmp_path_factory, "prep_wh"
+    )
+    shard_b = links.filter((F.col("page_id") >= 100) & (F.col("page_id") < 200))
+    real_assign = wave_mod.assign_sample_ids
+
+    def failing_assign(*a, **k):
+        real_assign(*a, **k)
+        raise RuntimeError("injected prep failure")
+
+    monkeypatch.setattr(wave_mod, "assign_sample_ids", failing_assign)
+    with pytest.raises(RuntimeError, match="injected prep"):
+        run_wave(spark, wh, cfg, pairs, robots, shard_b, collect_lineage=False, shard_key="b")
+    monkeypatch.undo()
+
+    now = _persistent_ids(spark)
+    assert now - after_a == frozenset(), f"failed prep stranded {sorted(now - after_a)}"
+    assert getattr(wh, "_bloom_session_cache", None) is None
+    assert now & cache_ids == frozenset(), "evicted cache blocks still persisted"
+
+    # the retry rebuilds the cache from the durable tables and commits
+    m = run_wave(spark, wh, cfg, pairs, robots, shard_b, collect_lineage=False, shard_key="b")
+    assert m["wave_no"] == 2
+    assert wh._bloom_session_cache["snap"] == m["snapshot_id"]
+
+
+def test_every_committed_wave_carries_timing(spark, fx_dir, tmp_path_factory):
+    """Each committed manifest records its own cost: prep, stage-A/status and
+    gather wall seconds, and every job's start offset and duration — input
+    and drain waves, bloom and exact mode."""
+    links = spark.read.parquet(f"{fx_dir}/wat_links.parquet").filter(F.col("page_id") < 60)
+    pairs = spark.read.parquet(f"{fx_dir}/pairs.parquet")
+    robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
+    for mode in ("bloom", "exact"):
+        wh = Warehouse(str(tmp_path_factory.mktemp(f"timing_{mode}")))
+        cfg = EngineConfig(default_host_budget=5, wave_seconds=0.0, dedup_mode=mode)
+        returned = [
+            run_wave(spark, wh, cfg, pairs, robots, links.filter(F.col("page_id") % 2 == i),
+                     collect_lineage=(i == 0), shard_key=f"t{i}")
+            for i in range(2)
+        ]
+        returned.append(run_wave(spark, wh, cfg, pairs, robots, None, collect_lineage=False))
+        committed = wh.committed()
+        assert [m["timing"] for m in committed] == [m["timing"] for m in returned]
+        for m in committed:
+            t = m["timing"]
+            phases = [t["prep_s"], t["status_s"], t["gather_s"]]
+            assert min(phases) >= 0.0
+            jobs = t["jobs"]
+            assert {"sample_ids", "frontier", "pairs_out", "status", "metrics"} <= set(jobs)
+            if mode == "exact":
+                assert {"seen_keys", "retry_keys"} <= set(jobs)
+            elif m["shard_key"] is not None:
+                assert "bloom_fold" in jobs
+            for label, j in jobs.items():
+                assert j["start_s"] >= 0.0 and j["dur_s"] >= 0.0, label
+                # every job ends inside the timed phases (rounding slack)
+                assert j["start_s"] + j["dur_s"] <= sum(phases) + 1e-3, label

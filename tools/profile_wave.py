@@ -1,11 +1,12 @@
 """Phase profile of the committed bloom wave (the bench's hot metric).
 
 Replicates bench.py's committed-wave loop (disjoint page_id shards, wave 1
-untimed) with SPARK_GRAFT_WAVE_TIMING=1 so run_wave prints per-stage AND
-per-job wall times (stage A = frontier+pairs_out+status jobs; stage B = state
-writes + metrics + session-cache fold + lineage, submitted once status
-resolves; commit = manifest link). Use this to decide
-whether the remaining committed-vs-uncommitted delta is worth engineering.
+untimed) and prints each wave's own `timing` from its manifest: the phase
+wall times (prep = plan build incl. the sample-id job; status = stage A up to
+the status counts; gather = the rest of stage B, lineage and the metrics
+write) and every job's start offset and duration. The commit (manifest link)
+is the remainder of the wave's total. Use this to decide whether the
+remaining committed-vs-uncommitted delta is worth engineering.
 
   python tools/profile_wave.py [fixture_scale]
 """
@@ -20,7 +21,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-os.environ["SPARK_GRAFT_WAVE_TIMING"] = "1"
 
 
 def main() -> None:
@@ -59,11 +59,16 @@ def main() -> None:
         for shard in shards[1:]:
             t0 = time.perf_counter()
             m = run_wave(spark, wh, cfg, pairs, robots, shard, collect_lineage=False)
+            t = m["timing"]
             print(
                 f"wave {m['wave_no']}: total={time.perf_counter() - t0:.3f}s"
+                f" prep={t['prep_s']:.3f}s status={t['status_s']:.3f}s"
+                f" gather={t['gather_s']:.3f}s"
                 f" scheduled={m['counters']['scheduled']}"
                 f" candidates={m['counters']['candidates']}"
             )
+            for label, j in sorted(t["jobs"].items(), key=lambda kv: kv[1]["start_s"]):
+                print(f"  job {label}: start+{j['start_s']:.3f}s dur={j['dur_s']:.3f}s")
     finally:
         shutil.rmtree(wh_dir, ignore_errors=True)
 
