@@ -1,7 +1,8 @@
 """Benchmark harness (driver-run per round → BENCH_r{N}.json).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on) and
+prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 Also reports throughput for the frontier wave (URLs scheduled/sec, pairs
@@ -82,12 +83,12 @@ def _wave_bench(spark, fx_dir, cfg, links_filter: str | None = None):
 def run_headline() -> dict:
     import __spark_entry__ as entrymod
     from crawlingathome_worker_spark.config import EngineConfig
-    from crawlingathome_worker_spark.session import get_spark
+    from crawlingathome_worker_spark.session import get_spark, worker_count
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = worker_count()
     fx_dir = _fixture_dir(BENCH_FIXTURE_SCALE)
-    spark = get_spark(app_name="cah-bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark = get_spark(app_name="cah-bench", shuffle_partitions=cpus)
     _warmup(spark)
 
     # warm the OS page cache for the input tables so timings measure query
@@ -166,7 +167,7 @@ def run_headline() -> dict:
         bloom_cfg = EngineConfig(
             default_host_budget=100_000, wave_seconds=0.0, dedup_mode="bloom"
         )
-        links_w = spark.read.parquet(os.path.join(fx_dir, "wat_links.parquet")).repartition(int(cpus))
+        links_w = spark.read.parquet(os.path.join(fx_dir, "wat_links.parquet")).repartition(cpus)
         robots_w = spark.read.parquet(os.path.join(fx_dir, "robots.parquet"))
         pairs_w = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet"))
         from crawlingathome_worker_spark.plans.wave import run_wave
@@ -218,7 +219,7 @@ def run_headline() -> dict:
     # image decode throughput (Arrow batch decode over the pairs fixture)
     from crawlingathome_worker_spark.operators.fetch import with_decoded
 
-    pairs = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet")).repartition(int(cpus))
+    pairs = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet")).repartition(cpus)
     n_imgs = pairs.count()
     # min-of-3 like every per-query timing above: a single run read as much
     # as ±25% host noise across rounds (r4→r5 adjudication, min-of-9 ≡ r4)

@@ -15,7 +15,8 @@ Usage:
       --queries q20_minhash_lsh_pairs,q26_embedding_neardup \
       --runs 3 --tag before --plans-dir plans/r06
 Env contract matches bench.py: $SPARK_GRAFT_SF_DIR (default sf0.1),
-$SPARK_GRAFT_CPUS (default 32, master local[$SPARK_GRAFT_CPUS]).
+$SPARK_GRAFT_CPUS (default: the cores this process may run on; master
+local[$SPARK_GRAFT_CPUS]).
 """
 
 from __future__ import annotations
@@ -51,13 +52,11 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from bench import _warmup
-    from crawlingathome_worker_spark.session import get_spark
+    from crawlingathome_worker_spark.session import get_spark, worker_count
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="cah-bench-extra", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
+    cpus = worker_count()
+    spark = get_spark(app_name="cah-bench-extra", shuffle_partitions=cpus)
     _warmup(spark)
 
     # warm the OS page cache like bench.py so timings are warm-read

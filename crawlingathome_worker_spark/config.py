@@ -76,11 +76,6 @@ class EngineConfig:
     default_host_budget: int = 64  # scheduled URLs per host per wave when no crawl_delay
     wave_seconds: float = 60.0  # budget = wave_seconds / crawl_delay when delay known
     salt_buckets: int = 16  # host-salting for hot-domain skew (SURVEY.md §4 O1)
-    # adaptive salting: derive per-host salt counts from host frequencies (one
-    # extra small agg + broadcast per wave); identical results, better task
-    # balance when host skew is extreme
-    adaptive_salt: bool = False
-    salt_target_rows: int = 50_000  # phase-1 window task size target
     # CLIP-proxy score threshold (deterministic stub scorer; see functions/udfs.py)
     clip_threshold: float = -1.0  # keep-all by default; tests pin specific values
     # dedup mode: "exact" (anti-join vs key table — test oracle path) or "bloom"

@@ -3,8 +3,10 @@
 Reference semantics (crawlingathome.py:82-95): candidates POST their pair_md5 to a
 "clipped" bloom then a "parsed" bloom; only keys unseen by both survive. Here the
 exact-mode implementation is a pair of LEFT ANTI joins against key tables (the test
-oracle path, SURVEY.md §2.4 J2/J3); bloom mode (state/bloom.py) swaps in a
-partitioned bloom membership test with identical call shape.
+oracle path, SURVEY.md §2.4 J2/J3); bloom mode swaps in the fused partitioned
+gate state/bloom.py::seen_gate_bloom, which takes the two bloom tables and the
+cuckoo table instead of key tables and computes the same predicate in one
+cogroup.
 
 North_rule J5: a key that IS in the "parsed" set but sits in the retry (cuckoo)
 slots passes anyway — that is the delete path that fixes the reference's lost-retry

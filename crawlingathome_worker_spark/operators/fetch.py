@@ -49,6 +49,9 @@ _DECODE_STRUCT = StructType(
         StructField("img_feat", ArrayType(FloatType())),
     ]
 )
+_DECODE_SCORE_STRUCT = StructType(
+    list(_DECODE_STRUCT.fields) + [StructField("score", FloatType())]
+)
 
 
 def simulated_fetch(scheduled: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -66,70 +69,26 @@ def simulated_fetch(scheduled: DataFrame, pairs: DataFrame) -> DataFrame:
     return scheduled.join(pairs.select("image_id", "bytes"), "image_id", "left")
 
 
-def with_decoded(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Batch-decode `bytes_col` → w_dec/h_dec/fmt_dec/dec_ok/phash/img_feat.
+def with_decoded(
+    df: DataFrame, bytes_col: str = "bytes", caption_col: str | None = None
+) -> DataFrame:
+    """Batch-decode `bytes_col` → w_dec/h_dec/fmt_dec/dec_ok/phash/img_feat,
+    plus the CLIP-proxy `score` of the image against `caption_col` when one is
+    given (null for a null caption or an undecodable image).
 
     Implemented as a STRUCT-returning scalar pandas UDF, not mapInPandas: with
-    ArrowEvalPython only the INPUT column (the image bytes) crosses into Python
-    and only the small metadata struct comes back — the JVM keeps the original
-    rows and zips the result positionally. A mapInPandas version would echo the
-    multi-GB bytes column back out of Python, doubling Arrow traffic (measured
-    ~1.9× slower at 32 cores on the 200k-image fixture)."""
-
-    @F.pandas_udf(_DECODE_STRUCT)
-    def decode_udf(col: pd.Series) -> pd.DataFrame:
-        n = len(col)
-        w = [0] * n
-        h = [0] * n
-        fmt: list[str | None] = [None] * n
-        ok = [False] * n
-        ph: list[int | None] = [None] * n
-        feat: list[list[float] | None] = [None] * n
-        for i in range(n):
-            b = col.iat[i]
-            if b is None:
-                continue
-            dec = fakeimg.decode(bytes(b))
-            if dec is None:
-                continue
-            f0, w0, h0, img = dec
-            fmt[i], w[i], h[i], ok[i] = f0, w0, h0, True
-            ph[i] = phash.phash64(img)
-            feat[i] = phash.image_feature(img).tolist()
-        return pd.DataFrame(
-            {
-                "w_dec": pd.array(w, dtype="int32"),
-                "h_dec": pd.array(h, dtype="int32"),
-                "fmt_dec": fmt,
-                "dec_ok": ok,
-                "phash": pd.array(ph, dtype="Int64"),
-                "img_feat": feat,
-            }
-        )
-
-    # asNondeterministic: one decode per row, ever — Catalyst must not duplicate
-    # the evaluation when downstream filters/projections reference struct fields.
-    dec = df.withColumn("_dec", decode_udf.asNondeterministic()(F.col(bytes_col)))
-    return dec.select("*", "_dec.*").drop("_dec")
-
-
-_DECODE_SCORE_STRUCT = StructType(
-    list(_DECODE_STRUCT.fields) + [StructField("score", FloatType())]
-)
-
-
-def with_decoded_and_scored(
-    df: DataFrame, bytes_col: str = "bytes", caption_col: str = "caption"
-) -> DataFrame:
-    """Decode + pHash + image feature + text embed + CLIP-proxy score in ONE
-    Python stage ("decode once, reuse for everything"): vs chaining with_decoded
-    → text_feature_udf → clip_score_udf this removes two ArrowEvalPython stage
-    barriers per wave — per-stage latency is the constant that caps small-wave
+    ArrowEvalPython only the INPUT columns (the image bytes, the caption) cross
+    into Python and only the small metadata struct comes back — the JVM keeps
+    the original rows and zips the result positionally. A mapInPandas version
+    would echo the multi-GB bytes column back out of Python, doubling Arrow
+    traffic (measured ~1.9× slower at 32 cores on the 200k-image fixture).
+    Scoring in the same pass ("decode once, reuse for everything") saves the
+    wave two ArrowEvalPython stage barriers over chaining text_feature_udf →
+    clip_score_udf — per-stage latency is the constant that caps small-wave
     scaling (BENCH/BASELINE.md)."""
     from ..functions.udfs import clip_proxy_score, text_feature
 
-    @F.pandas_udf(_DECODE_SCORE_STRUCT)
-    def decode_score_udf(col: pd.Series, caps: pd.Series) -> pd.DataFrame:
+    def decode(col: pd.Series, caps: pd.Series | None) -> pd.DataFrame:
         n = len(col)
         w = [0] * n
         h = [0] * n
@@ -150,24 +109,36 @@ def with_decoded_and_scored(
             ph[i] = phash.phash64(img)
             fv = phash.image_feature(img)
             feat[i] = fv.tolist()
-            cap = caps.iat[i]
-            if cap is not None:
-                score[i] = clip_proxy_score(fv, text_feature(cap))
-        return pd.DataFrame(
-            {
-                "w_dec": pd.array(w, dtype="int32"),
-                "h_dec": pd.array(h, dtype="int32"),
-                "fmt_dec": fmt,
-                "dec_ok": ok,
-                "phash": pd.array(ph, dtype="Int64"),
-                "img_feat": feat,
-                "score": pd.array(score, dtype="float32"),
-            }
-        )
+            if caps is not None and caps.iat[i] is not None:
+                score[i] = clip_proxy_score(fv, text_feature(caps.iat[i]))
+        out = {
+            "w_dec": pd.array(w, dtype="int32"),
+            "h_dec": pd.array(h, dtype="int32"),
+            "fmt_dec": fmt,
+            "dec_ok": ok,
+            "phash": pd.array(ph, dtype="Int64"),
+            "img_feat": feat,
+        }
+        if caps is not None:
+            out["score"] = pd.array(score, dtype="float32")
+        return pd.DataFrame(out)
 
-    dec = df.withColumn(
-        "_dec", decode_score_udf.asNondeterministic()(F.col(bytes_col), F.col(caption_col))
-    )
+    # the UDF's name is what plans print, so each shape keeps its own
+    if caption_col is None:
+        def decode_udf(col: pd.Series) -> pd.DataFrame:
+            return decode(col, None)
+
+        udf = F.pandas_udf(decode_udf, _DECODE_STRUCT)
+        args = [F.col(bytes_col)]
+    else:
+        def decode_score_udf(col: pd.Series, caps: pd.Series) -> pd.DataFrame:
+            return decode(col, caps)
+
+        udf = F.pandas_udf(decode_score_udf, _DECODE_SCORE_STRUCT)
+        args = [F.col(bytes_col), F.col(caption_col)]
+    # asNondeterministic: one decode per row, ever — Catalyst must not duplicate
+    # the evaluation when downstream filters/projections reference struct fields.
+    dec = df.withColumn("_dec", udf.asNondeterministic()(*args))
     return dec.select("*", "_dec.*").drop("_dec")
 
 
@@ -178,7 +149,7 @@ def classify_and_score(fetched: DataFrame, cfg: EngineConfig) -> DataFrame:
     the reference's exact thresholds, then the CLIP-similarity gate the project
     ran downstream (README.md:8) as a deterministic proxy scorer.
     """
-    decoded = with_decoded_and_scored(fetched)
+    decoded = with_decoded(fetched, caption_col="caption")
     status = (
         F.when(F.col("bytes").isNull(), F.lit("error"))  # network failure → retryable
         .when(F.length(F.col("bytes")) < cfg.min_image_bytes, F.lit("too_small"))  # F9 :103

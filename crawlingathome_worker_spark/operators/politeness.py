@@ -9,19 +9,24 @@ cap. The engine replaces that with explicit, deterministic scheduling:
 - per-host budget from crawl_delay (budget = wave_seconds / delay, min 1);
 - priority key = md5(url ‖ wave ‖ seed): the *seeded* equivalent of the reference's
   shuffle, deterministic and uniformly host-spreading (B2 contract);
-- per-host top-k via **two-phase window** (local top-k within (host, salt) buckets,
-  then final top-k per host): the hot host that owns 30% of all URLs never lands in
-  a single window task — the first phase cuts its row count to salt_buckets × k
-  before the per-host window runs. At 1000-executor scale this is the difference
-  between a straggler task with 30% of the wave and a balanced plan.
+- per-host top-k via **two-phase window** (`two_phase_topk`: local top-k within
+  (host, salt) buckets, then final top-k per host): the hot host that owns 30% of
+  all URLs never lands in a single window task — the first phase cuts its row
+  count to salt_buckets × k before the per-host window runs. At 1000-executor
+  scale this is the difference between a straggler task with 30% of the wave and
+  a balanced plan. The same function is operators/sampling.py's per-stratum
+  quota.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+
+# private columns of two_phase_topk; an input carrying one is refused
+_TOPK_COLS = ("_salt", "_r1", "_r2")
 
 
 def parse_robots_txt(
@@ -107,65 +112,65 @@ def with_priority(df: DataFrame, wave_no: int, cfg: EngineConfig) -> DataFrame:
     )
 
 
+def two_phase_topk(
+    df: DataFrame,
+    group_col: str,
+    order_cols: list[str],
+    limit_col: str,
+    salt_by: Column,
+    salt_buckets: int,
+) -> tuple[DataFrame, DataFrame]:
+    """→ (kept, dropped): per `group_col`, the `limit_col` rows first in
+    `order_cols` order, and every other row.
+
+    Phase 1 ranks within (group, pmod(xxhash64(salt_by), salt_buckets))
+    buckets and keeps at most `limit_col` per bucket; phase 2 ranks the
+    survivors per group. Identical result to a single per-group window (top-k
+    is decomposable), but the hot group is never materialized in one task.
+
+    Contract: `limit_col` must be constant per group. Per-row limits would
+    break decomposability: a phase-1-dropped row no longer consumes a phase-2
+    rank, while in a single window it would (pinned by
+    tests/test_adaptive_salt.py::test_two_phase_topk_equals_naive_single_window).
+    """
+    taken = [c for c in _TOPK_COLS if c in df.columns]
+    if taken:
+        raise ValueError(f"two_phase_topk: input already has private column(s) {taken}")
+    limit = F.col(limit_col)
+    salt = F.pmod(F.xxhash64(salt_by), F.lit(salt_buckets))
+    # `dropped` is the union of the two rank complements — no anti-join back
+    # on a key (the round-1 politeness plan re-shuffled the entire wave on url
+    # and recomputed the frontier subtree). Phase 2 must rank ONLY phase-1
+    # survivors (at most salt_buckets × limit rows per group): ranking the full
+    # input per group would put the hot group's entire row set back into one
+    # window task — the straggler the two-phase design exists to kill. The
+    # union re-reads the upstream twice, which is cheap where it matters
+    # (run_wave persists the candidate frame) and strictly less work than the
+    # anti-join's shuffle + subtree recompute.
+    w1 = Window.partitionBy(group_col, "_salt").orderBy(*order_cols)
+    ranked1 = df.withColumn("_salt", salt).withColumn("_r1", F.row_number().over(w1))
+    local = ranked1.filter(F.col("_r1") <= limit).drop("_r1", "_salt")
+    w2 = Window.partitionBy(group_col).orderBy(*order_cols)
+    ranked2 = local.withColumn("_r2", F.row_number().over(w2))
+    kept = ranked2.filter(F.col("_r2") <= limit).drop("_r2")
+    dropped = (
+        ranked1.filter(F.col("_r1") > limit)
+        .drop("_r1", "_salt")
+        .unionByName(ranked2.filter(F.col("_r2") > limit).drop("_r2"))
+    )
+    return kept, dropped
+
+
 def politeness_split(
     candidates: DataFrame, wave_no: int, cfg: EngineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """→ (scheduled, deferred). Scheduled = per-host top-budget by priority_key;
-    deferred rows stay in the frontier for later waves.
-
-    Two-phase top-k: phase 1 ranks within (host, salt) buckets and keeps at most
-    `host_budget` per bucket; phase 2 ranks the survivors per host. Identical
-    result to a single per-host window (top-k is decomposable), but the hot-host
-    partition is never materialized in one task.
-
-    Contract: `host_budget` must be constant per host (robots_gate guarantees
-    this — it is a property of the host). Per-row budgets would break
-    decomposability: a phase-1-dropped row no longer consumes a phase-2 rank,
-    while in a single window it would (pinned by
-    tests/test_adaptive_salt.py::test_two_phase_topk_equals_naive_single_window).
-    """
+    """→ (scheduled, deferred). Scheduled = per-host top-`host_budget` by
+    (priority_key, url), the two-phase salted top-k over (host, url-hash salt);
+    deferred rows stay in the frontier for later waves. `host_budget` is
+    constant per host (robots_gate derives it from the host's crawl delay),
+    which is the top-k's decomposability contract."""
     df = with_priority(candidates, wave_no, cfg)
-    if cfg.adaptive_salt:
-        # Derive per-host salt counts from the actual host frequencies (SURVEY.md
-        # §4: "salt count tuned by host-frequency sketch"): big hosts get enough
-        # buckets that no phase-1 window task exceeds ~salt_target_rows rows;
-        # singleton hosts get salt=1 (no pointless spread). The host-count agg is
-        # map-side combinable and the result is broadcast. Top-k is decomposable,
-        # so the scheduled SET is identical for any salt counts — only the task
-        # size distribution changes.
-        counts = candidates.groupBy("host").agg(F.count(F.lit(1)).alias("_hn"))
-        nsalt = F.least(
-            F.lit(cfg.salt_buckets).cast("long"),
-            F.greatest(F.lit(1).cast("long"), F.ceil(F.col("_hn") / cfg.salt_target_rows)),
-        )
-        df = df.join(
-            F.broadcast(counts.select("host", nsalt.alias("_nsalt"))), "host", "left"
-        )
-        salt = F.pmod(F.xxhash64(F.col("url")), F.coalesce(F.col("_nsalt"), F.lit(1)))
-    else:
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.salt_buckets))
-    # The rank columns fully determine the split, so `deferred` is the union of
-    # the two rank complements — no anti-join back on url (the round-1 plan
-    # re-shuffled the entire wave on url and recomputed the frontier subtree).
-    # Phase 2 must rank ONLY phase-1 survivors (at most salt_buckets × budget
-    # rows per host): ranking the full wave per host would put the hot host's
-    # entire row set back into one window task — the straggler the two-phase
-    # design exists to kill. The union re-reads the upstream twice, which is
-    # cheap where it matters (run_wave persists the candidate frame) and
-    # strictly less work than the anti-join's url shuffle + subtree recompute.
-    w1 = Window.partitionBy("host", "_salt").orderBy("priority_key", "url")
-    ranked1 = df.withColumn("_salt", salt).withColumn("_r1", F.row_number().over(w1))
-    local = ranked1.filter(F.col("_r1") <= F.col("host_budget")).drop("_r1", "_salt")
-    w2 = Window.partitionBy("host").orderBy("priority_key", "url")
-    ranked2 = local.withColumn("_r2", F.row_number().over(w2))
-    scheduled = ranked2.filter(F.col("_r2") <= F.col("host_budget")).drop("_r2")
-    drop_cols = ["priority_key"] + (["_nsalt"] if cfg.adaptive_salt else [])
-    deferred = (
-        ranked1.filter(F.col("_r1") > F.col("host_budget"))
-        .drop("_r1", "_salt")
-        .unionByName(ranked2.filter(F.col("_r2") > F.col("host_budget")).drop("_r2"))
-        .drop(*drop_cols)
+    scheduled, deferred = two_phase_topk(
+        df, "host", ["priority_key", "url"], "host_budget", F.col("url"), cfg.salt_buckets
     )
-    if cfg.adaptive_salt:
-        scheduled = scheduled.drop("_nsalt")
-    return scheduled, deferred
+    return scheduled, deferred.drop("priority_key")

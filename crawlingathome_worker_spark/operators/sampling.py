@@ -6,19 +6,19 @@ membership. This operator keeps, per stratum, the `quota` rows that rank
 lowest under a seeded uniform hash of the row id — deterministic across runs,
 cluster sizes, and partitionings.
 
-Scale shape: the same decomposable two-phase top-k as the politeness
-scheduler (operators/politeness.py): phase 1 ranks within (stratum, salt)
-buckets and keeps at most `quota` per bucket, phase 2 ranks the ≤
-salt_buckets × quota survivors per stratum — a hot stratum (en is ~half of
-any web corpus) never materializes in a single window task. Decomposability
-requires the quota to be constant per stratum (it is — a property of the
-stratum), the same contract politeness_split pins.
+Scale shape: the politeness scheduler's decomposable two-phase salted top-k
+(operators/politeness.py::two_phase_topk) with the stratum as the group and
+the quota as the limit — a hot stratum (en is ~half of any web corpus) never
+materializes in a single window task. The quota is constant per stratum (a
+property of the stratum), which is the top-k's decomposability contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .politeness import two_phase_topk
 
 
 def stratified_sample(
@@ -33,20 +33,17 @@ def stratified_sample(
     md5(id ‖ seed) (ties broken by id — total order, so membership is
     unique). `quotas`: (stratum_col, quota long) — small dim, broadcast.
     Strata absent from `quotas` are dropped entirely; a stratum with fewer
-    rows than its quota keeps them all. Output columns = input columns."""
+    rows than its quota keeps them all. Output columns = input columns, in
+    input order and unchanged (an input `quota` column included); an input
+    carrying one of the private columns `_k`, `_quota`, `_salt`, `_r1`, `_r2`
+    is refused with a ValueError."""
+    taken = [c for c in ("_k", "_quota") if c in df.columns]
+    if taken:
+        raise ValueError(f"stratified_sample: input already has private column(s) {taken}")
     key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"|s{seed}")))
-    d = df.join(F.broadcast(quotas), stratum_col).withColumn("_k", key)
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salt_buckets))
-    w1 = Window.partitionBy(stratum_col, "_salt").orderBy("_k", id_col)
-    local = (
-        d.withColumn("_salt", salt)
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= F.col("quota"))
-        .drop("_r1", "_salt")
+    dim = quotas.select(stratum_col, F.col("quota").alias("_quota"))
+    d = df.join(F.broadcast(dim), stratum_col).withColumn("_k", key)
+    kept, _ = two_phase_topk(
+        d, stratum_col, ["_k", id_col], "_quota", F.col(id_col).cast("string"), salt_buckets
     )
-    w2 = Window.partitionBy(stratum_col).orderBy("_k", id_col)
-    return (
-        local.withColumn("_r2", F.row_number().over(w2))
-        .filter(F.col("_r2") <= F.col("quota"))
-        .drop("_r2", "_k", "quota")
-    )
+    return kept.select(*df.columns)

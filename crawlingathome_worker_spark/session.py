@@ -12,12 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def worker_count() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str:
+    """$SPARK_DRIVER_MEM, else half of physical memory capped at 16g: a heap
+    sized for a bigger host gets the JVM killed by the OOM killer instead of
+    spilling."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "crawlingathome-worker-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = worker_count()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
@@ -71,7 +84,7 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.local.dir", local_dir or "/tmp")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -81,38 +81,40 @@ WAT_SCHEMA = StructType(
 
 
 def read_wat_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw WAT text → (page_id, page_url, pos, link_url, alt) link records.
+    """Raw WAT text file(s) at `path` → link records (see wat_lines_to_links)."""
+    return wat_lines_to_links(spark.read.text(path))
+
+
+def wat_lines_to_links(lines: DataFrame) -> DataFrame:
+    """Raw WAT lines (a `value` string column, batch or streaming micro-batch)
+    → (page_id, page_url, pos, link_url, alt) link records.
 
     page_id is the line's monotonic file position (document order, J1's ordering
     key). Lines without "IMG@" or without a parseable Links array are dropped,
     exactly like the reference's prefilter + try/except (crawlingathome.py:43,
     58-61, 70-79).
     """
-    lines = (
-        spark.read.text(path)
-        .filter(F.col("value").contains("IMG@"))  # F1 — before from_json
+    pages = (
+        lines.filter(F.col("value").contains("IMG@"))  # F1 — before from_json
         .withColumn("page_id", F.monotonically_increasing_id())
+        .select("page_id", F.from_json(F.col("value"), WAT_SCHEMA).alias("j"))
+        .select(
+            "page_id",
+            F.col("j.Envelope.WARC-Header-Metadata.WARC-Target-URI").alias("page_url"),
+            F.col("j.Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata.Links").alias(
+                "links"
+            ),
+        )
     )
-    parsed = lines.select(
-        "page_id", F.from_json(F.col("value"), WAT_SCHEMA).alias("j")
-    ).select(
-        "page_id",
-        F.col("j.Envelope.WARC-Header-Metadata.WARC-Target-URI").alias("page_url"),
-        F.col("j.Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata.Links").alias(
-            "links"
-        ),
+    return (
+        pages.filter(F.col("page_url").isNotNull() & F.col("links").isNotNull())
+        .select("page_id", "page_url", F.posexplode("links").alias("pos", "link"))
+        .select(
+            "page_id",
+            "page_url",
+            F.col("pos").cast("int").alias("pos"),
+            F.col("link.url").alias("link_url"),
+            F.col("link.alt").alias("alt"),
+        )
+        .filter(F.col("link_url").isNotNull())
     )
-    exploded = parsed.filter(
-        F.col("page_url").isNotNull() & F.col("links").isNotNull()
-    ).select(
-        "page_id",
-        "page_url",
-        F.posexplode("links").alias("pos", "link"),
-    )
-    return exploded.select(
-        "page_id",
-        "page_url",
-        F.col("pos").cast("int").alias("pos"),
-        F.col("link.url").alias("link_url"),
-        F.col("link.alt").alias("alt"),
-    ).filter(F.col("link_url").isNotNull())

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BloomParams
+from .cuckoo import cuckoo_contains, cuckoo_hash, cuckoo_table
 
 STATE_SCHEMA = "part int, bits binary"
 
@@ -38,45 +39,20 @@ def _with_probe_cols(df: DataFrame, key: str, params: BloomParams) -> DataFrame:
     )
 
 
-def _probe_idx(h1: np.ndarray, h2: np.ndarray, j: int, m: int) -> np.ndarray:
-    return (h1 + np.uint64(j) * h2) % np.uint64(m)
+def _probes(left: pd.DataFrame, k: int, m: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(byte index, bit index) of each of the k probes (Kirsch-Mitzenmacher
+    h1 + j·h2 mod m) of every row of `left`."""
+    h1 = left["_h1"].to_numpy(np.int64).view(np.uint64)
+    h2 = left["_h2"].to_numpy(np.int64).view(np.uint64)
+    for j in range(k):
+        idx = (h1 + np.uint64(j) * h2) % np.uint64(m)
+        yield (idx >> np.uint64(3)).astype(np.int64), (idx & np.uint64(7)).astype(np.uint8)
 
 
 def empty_bloom(spark: SparkSession, params: BloomParams) -> DataFrame:
     zeros = bytearray(params.bits_per_partition // 8)
     rows = [(p, bytes(zeros)) for p in range(params.partitions)]
     return spark.createDataFrame(rows, STATE_SCHEMA)
-
-
-def bloom_filter_unseen(
-    candidates: DataFrame, state: DataFrame, params: BloomParams, key: str = "pair_md5"
-) -> DataFrame:
-    """Rows of `candidates` whose key is NOT in the bloom (J2/J3 bloom mode)."""
-    m = params.bits_per_partition
-    k = params.num_hashes
-    probed = _with_probe_cols(candidates, key, params)
-    out_schema = candidates.schema
-    out_cols = candidates.columns
-
-    def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return left[out_cols] if set(out_cols) <= set(left.columns) else pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left[out_cols]  # no state for this partition → all unseen
-        bits = np.frombuffer(right["bits"].iat[0], dtype=np.uint8)
-        h1 = left["_h1"].to_numpy(np.int64).view(np.uint64)
-        h2 = left["_h2"].to_numpy(np.int64).view(np.uint64)
-        seen = np.ones(len(left), dtype=bool)
-        for j in range(k):
-            idx = _probe_idx(h1, h2, j, m)
-            seen &= (bits[(idx >> np.uint64(3)).astype(np.int64)] >> (idx & np.uint64(7)).astype(np.uint8)) & 1 != 0
-        return left.loc[~seen, out_cols]
-
-    return (
-        probed.groupBy("_bpart")
-        .cogroup(state.groupBy("part"))
-        .applyInPandas(check, out_schema)
-    )
 
 
 def bloom_add(
@@ -95,16 +71,8 @@ def bloom_add(
         else:
             part = int(right["part"].iat[0])
             bits = np.frombuffer(right["bits"].iat[0], dtype=np.uint8).copy()
-        if len(left):
-            h1 = left["_h1"].to_numpy(np.int64).view(np.uint64)
-            h2 = left["_h2"].to_numpy(np.int64).view(np.uint64)
-            for j in range(k):
-                idx = _probe_idx(h1, h2, j, m)
-                np.bitwise_or.at(
-                    bits,
-                    (idx >> np.uint64(3)).astype(np.int64),
-                    (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)),
-                )
+        for byte, bit in _probes(left, k, m):
+            np.bitwise_or.at(bits, byte, np.uint8(1) << bit)
         return pd.DataFrame({"part": [part], "bits": [bits.tobytes()]})
 
     return (
@@ -126,11 +94,10 @@ def seen_gate_bloom(
     """FUSED seen gate: clipped-bloom + parsed-bloom + cuckoo-retry membership
     in ONE cogroup shuffle.
 
-    The unfused pipeline (bloom_filter_unseen ×2 + cuckoo_members + union +
-    dropDuplicates) shuffles the candidate wave on the same pmod(hash(key), P)
-    key THREE times. All three state tables are co-partitioned by that key, so
-    one cogroup against the kind-tagged union of their partition rows computes
-    the full reference predicate per row —
+    All three state tables are co-partitioned by pmod(hash(key), P), so one
+    cogroup of the candidates against the kind-tagged union of their partition
+    rows computes the full reference predicate per row (a probe per state,
+    unioned and deduplicated, would shuffle the candidate wave three times) —
         pass ⇔ ¬clipped ∧ (¬parsed ∨ retryable)
     (crawlingathome.py:82-95 two bloom families; north_rule J5 retry override)
     — with one candidate shuffle and no union/dedup stage."""
@@ -139,15 +106,10 @@ def seen_gate_bloom(
             "fused gate needs bloom and cuckoo co-partitioned: "
             f"{bloom_params.partitions} != {cuckoo_params.partitions}"
         )
-    from .cuckoo import _fp_and_buckets
-
     m = bloom_params.bits_per_partition
     k = bloom_params.num_hashes
     nbuckets = cuckoo_params.buckets_per_partition
-    nslots = cuckoo_params.slots_per_bucket
-    probed = _with_probe_cols(candidates, key, bloom_params).withColumn(
-        "_ch", F.xxhash64(F.concat(F.col(key), F.lit("#cuckoo")))
-    )
+    probed = _with_probe_cols(candidates, key, bloom_params).withColumn("_ch", cuckoo_hash(key))
     state = (
         bloom_clipped.select("part", F.lit("c").alias("kind"), F.col("bits").alias("blob"))
         .unionByName(
@@ -161,32 +123,22 @@ def seen_gate_bloom(
         if len(left) == 0:
             return pd.DataFrame(columns=out_cols)
         blobs = dict(zip(right["kind"], right["blob"]))
-        h1 = left["_h1"].to_numpy(np.int64).view(np.uint64)
-        h2 = left["_h2"].to_numpy(np.int64).view(np.uint64)
 
         def bloom_seen(blob) -> np.ndarray:
             if blob is None:
                 return np.zeros(len(left), dtype=bool)
             bits = np.frombuffer(blob, dtype=np.uint8)
             seen = np.ones(len(left), dtype=bool)
-            for j in range(k):
-                idx = _probe_idx(h1, h2, j, m)
-                seen &= (
-                    bits[(idx >> np.uint64(3)).astype(np.int64)]
-                    >> (idx & np.uint64(7)).astype(np.uint8)
-                ) & 1 != 0
+            for byte, bit in _probes(left, k, m):
+                seen &= (bits[byte] >> bit) & 1 != 0
             return seen
 
-        seen_c = bloom_seen(blobs.get("c"))
-        seen_p = bloom_seen(blobs.get("p"))
         if "k" in blobs:
-            tbl = np.frombuffer(blobs["k"], dtype=np.uint16).reshape(nbuckets, nslots)
             ch = left["_ch"].to_numpy(np.int64).view(np.uint64)
-            fp, b1, b2 = _fp_and_buckets(ch, nbuckets)
-            retry = (tbl[b1] == fp[:, None]).any(axis=1) | (tbl[b2] == fp[:, None]).any(axis=1)
+            retry = cuckoo_contains(cuckoo_table(blobs["k"], cuckoo_params), ch, nbuckets)
         else:
             retry = np.zeros(len(left), dtype=bool)
-        keep = ~seen_c & (~seen_p | retry)
+        keep = ~bloom_seen(blobs.get("c")) & (~bloom_seen(blobs.get("p")) | retry)
         return left.loc[keep, out_cols]
 
     return (

@@ -5,7 +5,8 @@ transient network failure blacklists a URL forever (B3, crawlingathome.py:148-15
 Bloom filters cannot delete; a cuckoo filter can. The engine keeps a partitioned
 cuckoo filter holding only the in-flight/retryable subset: insert on fetch error,
 delete on success or permanent rejection; a candidate passes the seen gate iff
-NOT bloom.contains OR cuckoo.contains (operators/dedup.py, plans/wave.py).
+NOT bloom.contains OR cuckoo.contains (state/bloom.py::seen_gate_bloom,
+operators/dedup.py).
 
 Standard (2,4)-cuckoo: 16-bit fingerprints, 4 slots/bucket, two candidate buckets
 i1 = h(key) mod B and i2 = i1 XOR h(fp) (B a power of two), eviction walk up to
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CuckooParams
@@ -28,10 +29,15 @@ STATE_SCHEMA = "part int, tbl binary"
 _MUL = np.uint64(0x5BD1E995)
 
 
+def cuckoo_hash(key: str) -> Column:
+    """The 64-bit hash a key's partition-local fingerprint and buckets derive from."""
+    return F.xxhash64(F.concat(F.col(key), F.lit("#cuckoo")))
+
+
 def _with_hash_cols(df: DataFrame, key: str, params: CuckooParams) -> DataFrame:
     return df.withColumn(
         "_cpart", F.pmod(F.hash(F.col(key)), F.lit(params.partitions))
-    ).withColumn("_ch", F.xxhash64(F.concat(F.col(key), F.lit("#cuckoo"))))
+    ).withColumn("_ch", cuckoo_hash(key))
 
 
 def _fp_and_buckets(ch: np.ndarray, nbuckets: int):
@@ -51,18 +57,25 @@ def empty_cuckoo(spark: SparkSession, params: CuckooParams) -> DataFrame:
     return spark.createDataFrame(rows, STATE_SCHEMA)
 
 
+def cuckoo_table(blob: bytes, params: CuckooParams) -> np.ndarray:
+    """A partition's state blob as a read-only (buckets, slots) uint16 view."""
+    return np.frombuffer(blob, dtype=np.uint16).reshape(
+        params.buckets_per_partition, params.slots_per_bucket
+    )
+
+
+def cuckoo_contains(tbl: np.ndarray, ch: np.ndarray, nbuckets: int) -> np.ndarray:
+    """Vectorized membership of the keys hashed to `ch` (uint64) in `tbl`."""
+    fp, b1, b2 = _fp_and_buckets(ch, nbuckets)
+    return (tbl[b1] == fp[:, None]).any(axis=1) | (tbl[b2] == fp[:, None]).any(axis=1)
+
+
 def _load_tbl(right: pd.DataFrame, params: CuckooParams) -> tuple[int | None, np.ndarray]:
     if len(right) == 0:
         return None, np.zeros(
             (params.buckets_per_partition, params.slots_per_bucket), dtype=np.uint16
         )
-    part = int(right["part"].iat[0])
-    tbl = (
-        np.frombuffer(right["tbl"].iat[0], dtype=np.uint16)
-        .reshape(params.buckets_per_partition, params.slots_per_bucket)
-        .copy()
-    )
-    return part, tbl
+    return int(right["part"].iat[0]), cuckoo_table(right["tbl"].iat[0], params).copy()
 
 
 def cuckoo_update(
@@ -130,27 +143,3 @@ def cuckoo_update(
         return pd.DataFrame({"part": [part], "tbl": [tbl.tobytes()]})
 
     return ops.groupBy("_cpart").cogroup(state.groupBy("part")).applyInPandas(apply_ops, STATE_SCHEMA)
-
-
-def cuckoo_members(
-    candidates: DataFrame, state: DataFrame, params: CuckooParams, key: str = "pair_md5"
-) -> DataFrame:
-    """Rows of `candidates` whose key IS (probably) in the cuckoo filter."""
-    probed = _with_hash_cols(candidates, key, params)
-    out_cols = candidates.columns
-    B = params.buckets_per_partition
-
-    def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        _, tbl = _load_tbl(right, params)
-        ch = left["_ch"].to_numpy(np.int64).view(np.uint64)
-        fp, b1, b2 = _fp_and_buckets(ch, B)
-        hit = (tbl[b1] == fp[:, None]).any(axis=1) | (tbl[b2] == fp[:, None]).any(axis=1)
-        return left.loc[hit, out_cols]
-
-    return (
-        probed.groupBy("_cpart")
-        .cogroup(state.groupBy("part"))
-        .applyInPandas(check, candidates.schema)
-    )

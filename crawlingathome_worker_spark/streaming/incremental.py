@@ -17,38 +17,11 @@ events rollup in streaming/windowed.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..sources.wat import WAT_SCHEMA
+from ..sources.wat import wat_lines_to_links
 from ..state.snapshots import Warehouse
 from ..plans.wave import run_wave
-
-
-def _batch_to_links(batch_df: DataFrame) -> DataFrame:
-    """Raw WAT lines (streaming micro-batch) → link records. Mirrors
-    sources/wat.py:read_wat_lines; runs inside foreachBatch where the frame is
-    a plain batch DataFrame."""
-    lines = batch_df.filter(F.col("value").contains("IMG@")).withColumn(
-        "page_id", F.monotonically_increasing_id()
-    )
-    parsed = lines.select("page_id", F.from_json(F.col("value"), WAT_SCHEMA).alias("j")).select(
-        "page_id",
-        F.col("j.Envelope.WARC-Header-Metadata.WARC-Target-URI").alias("page_url"),
-        F.col("j.Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata.Links").alias("links"),
-    )
-    return (
-        parsed.filter(F.col("page_url").isNotNull() & F.col("links").isNotNull())
-        .select("page_id", "page_url", F.posexplode("links").alias("pos", "link"))
-        .select(
-            "page_id",
-            "page_url",
-            F.col("pos").cast("int").alias("pos"),
-            F.col("link.url").alias("link_url"),
-            F.col("link.alt").alias("alt"),
-        )
-        .filter(F.col("link_url").isNotNull())
-    )
 
 
 def stream_waves(
@@ -65,7 +38,7 @@ def stream_waves(
     frontier wave per discovered WAT file batch."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        links = _batch_to_links(batch_df)
+        links = wat_lines_to_links(batch_df)
         if links.limit(1).count() == 0:
             return
         run_wave(spark, wh, cfg, pairs, robots, links, collect_lineage=False)

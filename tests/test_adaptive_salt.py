@@ -1,44 +1,10 @@
-"""Adaptive host-salting: identical scheduled/deferred sets to fixed salting
-(top-k is decomposable), with per-host salt counts derived from frequency."""
+"""Two-phase salted top-k (operators/politeness.py::two_phase_topk): the
+salted per-host schedule is exactly the naive single-window one."""
 
 from pyspark.sql import functions as F
 
 from crawlingathome_worker_spark.config import EngineConfig
-from crawlingathome_worker_spark.operators.parse import parse_links
-from crawlingathome_worker_spark.operators.politeness import politeness_split, robots_gate
-
-
-def test_adaptive_salt_same_results(spark, fx_dir):
-    links = spark.read.parquet(f"{fx_dir}/wat_links.parquet")
-    robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
-    base = EngineConfig(default_host_budget=10, wave_seconds=30.0)
-    adap = EngineConfig(
-        default_host_budget=10,
-        wave_seconds=30.0,
-        adaptive_salt=True,
-        salt_target_rows=50,  # tiny target → the hot host really gets many salts
-    )
-    gated = robots_gate(parse_links(links, base), robots, base).persist()
-
-    s_fix, d_fix = politeness_split(gated, 1, base)
-    s_ad, d_ad = politeness_split(gated, 1, adap)
-    fix = {(r["host"], r["url"]) for r in s_fix.collect()}
-    ad = {(r["host"], r["url"]) for r in s_ad.collect()}
-    assert fix == ad  # scheduling decision independent of salt layout
-    assert d_fix.count() == d_ad.count()
-    gated.unpersist()
-
-
-def test_adaptive_salt_respects_budget(spark, fx_dir):
-    links = spark.read.parquet(f"{fx_dir}/wat_links.parquet")
-    robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
-    cfg = EngineConfig(
-        default_host_budget=5, wave_seconds=1e9, adaptive_salt=True, salt_target_rows=20
-    )
-    gated = robots_gate(parse_links(links, cfg), robots, cfg)
-    scheduled, _ = politeness_split(gated, 1, cfg)
-    per_host = scheduled.groupBy("host").count().agg(F.max("count")).collect()[0][0]
-    assert per_host <= 5
+from crawlingathome_worker_spark.operators.politeness import politeness_split
 
 
 def test_two_phase_topk_equals_naive_single_window(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -63,3 +64,22 @@ def test_seed_changes_membership_not_counts(spark):
     a = {r["doc_id"] for r in stratified_sample(docs, "lang", q, "doc_id", seed=1).collect()}
     b = {r["doc_id"] for r in stratified_sample(docs, "lang", q, "doc_id", seed=2).collect()}
     assert len(a) == len(b) == 60 and a != b
+
+
+def test_input_columns_survive_or_collision_is_refused(spark):
+    """Column-collision guard: an input `quota` column comes back unchanged
+    (same membership as without it, input column order kept); an input that
+    carries one of the operator's private columns is refused by name instead
+    of being silently overwritten or dropped."""
+    docs = _docs(spark)
+    q = _quotas(spark, [("en", 40), ("de", 10)])
+    plain = {r["doc_id"] for r in stratified_sample(docs, "lang", q, "doc_id").collect()}
+    with_quota = docs.withColumn("quota", F.lit(-7).cast("long"))
+    out = stratified_sample(with_quota, "lang", q, "doc_id")
+    assert out.columns == with_quota.columns
+    rows = out.collect()
+    assert {r["doc_id"] for r in rows} == plain and len(plain) == 50
+    assert {r["quota"] for r in rows} == {-7}
+    for col in ("_k", "_quota", "_salt", "_r1", "_r2"):
+        with pytest.raises(ValueError, match=col):
+            stratified_sample(docs.withColumn(col, F.lit(1)), "lang", q, "doc_id")

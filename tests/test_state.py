@@ -1,5 +1,10 @@
 """State-structure tests: partitioned bloom (FPR, no-false-negatives), cuckoo
-(insert/delete/reinsert — the B3 fix), snapshot resume equivalence."""
+(insert/delete/reinsert — the B3 fix), the fused seen gate, snapshot resume
+equivalence. Bloom and cuckoo membership is only ever probed through the fused
+gate (seen_gate_bloom), so these tests probe through it too: with an empty
+clipped bloom and an empty cuckoo a key passes iff it is NOT in the parsed
+bloom; with a parsed bloom whose every bit is set, a key passes iff it IS in
+the cuckoo filter."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,12 +12,13 @@ from pyspark.sql import functions as F
 from crawlingathome_worker_spark.config import BloomParams, CuckooParams, EngineConfig
 from crawlingathome_worker_spark.plans.wave import run_wave
 from crawlingathome_worker_spark.state.bloom import (
+    STATE_SCHEMA,
     bloom_add,
     bloom_fill_ratio,
-    bloom_filter_unseen,
     empty_bloom,
+    seen_gate_bloom,
 )
-from crawlingathome_worker_spark.state.cuckoo import cuckoo_members, cuckoo_update, empty_cuckoo
+from crawlingathome_worker_spark.state.cuckoo import cuckoo_update, empty_cuckoo
 from crawlingathome_worker_spark.state.snapshots import Warehouse
 
 from .oracle import load_fixture_inputs
@@ -24,16 +30,34 @@ def _keys(spark, prefix, n):
     )
 
 
+def _bloom_unseen(keys, parsed, params):
+    """Keys NOT in the `parsed` bloom: the gate with empty clipped and cuckoo."""
+    spark = keys.sparkSession
+    cparams = CuckooParams(buckets_per_partition=1 << 4, partitions=params.partitions)
+    return seen_gate_bloom(
+        keys, empty_bloom(spark, params), parsed, empty_cuckoo(spark, cparams), params, cparams
+    )
+
+
+def _cuckoo_members(keys, cuckoo, params):
+    """Keys IN the `cuckoo` filter: the gate with an all-ones parsed bloom."""
+    spark = keys.sparkSession
+    bparams = BloomParams(capacity=1000, fpr=1e-2, partitions=params.partitions)
+    ones = bytes([0xFF]) * (bparams.bits_per_partition // 8)
+    full = spark.createDataFrame([(p, ones) for p in range(bparams.partitions)], STATE_SCHEMA)
+    return seen_gate_bloom(keys, empty_bloom(spark, bparams), full, cuckoo, bparams, params)
+
+
 def test_bloom_no_false_negatives_and_fpr(spark):
     params = BloomParams(capacity=50_000, fpr=1e-3, partitions=4)
     state = empty_bloom(spark, params)
     added = _keys(spark, "in-", 20_000)
     state = bloom_add(state, added, params).persist()
     # no false negatives: every added key must be 'seen'
-    assert bloom_filter_unseen(added, state, params).count() == 0
+    assert _bloom_unseen(added, state, params).count() == 0
     # false-positive rate ≤ 2× nominal on disjoint keys (SURVEY.md §5 property 5)
     probe = _keys(spark, "out-", 20_000)
-    unseen = bloom_filter_unseen(probe, state, params).count()
+    unseen = _bloom_unseen(probe, state, params).count()
     fp_rate = (20_000 - unseen) / 20_000
     assert fp_rate <= 2 * params.fpr
     assert 0.0 < bloom_fill_ratio(state) < 0.5
@@ -56,16 +80,16 @@ def test_cuckoo_insert_delete_reinsert(spark):
     state = empty_cuckoo(spark, params)
     ks = _keys(spark, "r-", 500).persist()
     state = cuckoo_update(state, inserts=ks, deletes=None, params=params).persist()
-    assert cuckoo_members(ks, state, params).count() == 500  # all present
+    assert _cuckoo_members(ks, state, params).count() == 500  # all present
     # delete half
     half = ks.limit(250).persist()
     state2 = cuckoo_update(state, inserts=None, deletes=half, params=params).persist()
-    assert cuckoo_members(half, state2, params).count() == 0
+    assert _cuckoo_members(half, state2, params).count() == 0
     rest = ks.join(half, "pair_md5", "left_anti")
-    assert cuckoo_members(rest, state2, params).count() == 250
+    assert _cuckoo_members(rest, state2, params).count() == 250
     # reinsert the deleted half — deletability is the whole point (J5)
     state3 = cuckoo_update(state2, inserts=half, deletes=None, params=params)
-    assert cuckoo_members(ks, state3, params).count() == 500
+    assert _cuckoo_members(ks, state3, params).count() == 500
 
 
 def test_cuckoo_low_false_positive(spark):
@@ -73,8 +97,36 @@ def test_cuckoo_low_false_positive(spark):
     ks = _keys(spark, "in-", 2000)
     state = cuckoo_update(empty_cuckoo(spark, params), ks, None, params)
     other = _keys(spark, "out-", 5000)
-    fp = cuckoo_members(other, state, params).count()
+    fp = _cuckoo_members(other, state, params).count()
     assert fp / 5000 < 0.01  # 16-bit fingerprints ⇒ ~2*4/2^16 ≈ 1.2e-4 expected
+
+
+def test_fused_gate_equals_exact_filter_with_all_states_nonempty(spark):
+    """seen_gate_bloom ≡ seen_filter_exact over the same clipped, parsed and
+    retry keys, every state non-empty and the key ranges overlapping in every
+    combination (FPRs low enough that no false positive occurs on these keys)."""
+    from crawlingathome_worker_spark.operators.dedup import seen_filter_exact
+
+    bparams = BloomParams(capacity=10_000, fpr=1e-6, partitions=4)
+    cparams = CuckooParams(buckets_per_partition=1 << 12, partitions=4)
+    clipped, parsed = set(range(0, 200)), set(range(100, 700))
+    retry = set(range(150, 250)) | set(range(400, 500)) | set(range(900, 950))
+
+    def keys(idx, kind=None):
+        df = spark.createDataFrame([(i,) for i in sorted(idx)], "i long").withColumn(
+            "pair_md5", F.md5(F.concat(F.lit("k-"), F.col("i").cast("string")))
+        )
+        return df.withColumn("kind", F.lit(kind)) if kind else df
+
+    cands = keys(range(1000))
+    bc = bloom_add(empty_bloom(spark, bparams), keys(clipped), bparams)
+    bp = bloom_add(empty_bloom(spark, bparams), keys(parsed), bparams)
+    ck = cuckoo_update(empty_cuckoo(spark, cparams), keys(retry), None, cparams)
+    fused = {r["i"] for r in seen_gate_bloom(cands, bc, bp, ck, bparams, cparams).collect()}
+    seen_keys = keys(clipped, "clipped").unionByName(keys(parsed, "parsed"))
+    exact = {r["i"] for r in seen_filter_exact(cands, seen_keys, keys(retry)).collect()}
+    want = {i for i in range(1000) if i not in clipped and (i not in parsed or i in retry)}
+    assert fused == exact == want
 
 
 @pytest.mark.slow

@@ -27,13 +27,11 @@ def main() -> None:
     n_runs = int(sys.argv[1]) if len(sys.argv) > 1 else 7
     import __spark_entry__ as entrymod
     from bench import _warmup
-    from crawlingathome_worker_spark.session import get_spark
+    from crawlingathome_worker_spark.session import get_spark, worker_count
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="cah-adjudicate", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
+    cpus = worker_count()
+    spark = get_spark(app_name="cah-adjudicate", shuffle_partitions=cpus)
     _warmup(spark)
     from pyspark.sql import functions as F
 
@@ -59,7 +57,7 @@ def main() -> None:
     from crawlingathome_worker_spark.operators.fetch import with_decoded
 
     fx_dir = _fixture_dir(BENCH_FIXTURE_SCALE)
-    pairs = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet")).repartition(int(cpus))
+    pairs = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet")).repartition(cpus)
     sel = pairs.select("image_id", "bytes")
     with_decoded(sel).filter("dec_ok").count()  # warm
     times = []

@@ -31,16 +31,15 @@ def run(n_shards: int = 6) -> dict:
 
     from crawlingathome_worker_spark.config import EngineConfig
     from crawlingathome_worker_spark.plans.wave import run_wave
-    from crawlingathome_worker_spark.session import get_spark
+    from crawlingathome_worker_spark.session import get_spark, worker_count
     from crawlingathome_worker_spark.sources.fixtures import ensure_fixtures
     from crawlingathome_worker_spark.state.snapshots import Warehouse
 
     scale = float(os.environ.get("BENCH_FIXTURE_SCALE", "8"))
     fx = ensure_fixtures(os.path.join(REPO, ".fixtures"), scale=scale)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="bloom-cache-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
-    links = spark.read.parquet(os.path.join(fx, "wat_links.parquet")).repartition(int(cpus))
+    cpus = worker_count()
+    spark = get_spark(app_name="bloom-cache-bench", shuffle_partitions=cpus)
+    links = spark.read.parquet(os.path.join(fx, "wat_links.parquet")).repartition(cpus)
     pairs = spark.read.parquet(os.path.join(fx, "pairs.parquet"))
     robots = spark.read.parquet(os.path.join(fx, "robots.parquet"))
     shards = [links.filter(F.col("page_id") % n_shards == i) for i in range(n_shards)]

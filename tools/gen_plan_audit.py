@@ -30,6 +30,7 @@ ANNOTATIONS = {
     "q48_tpch_q10": "4-table star: dims broadcast, fact shuffles once; top-20 via TakeOrderedAndProject, never a global sort.",
     "q49_tpch_q19": "OR-of-ANDs predicate evaluated in one codegen span over the broadcast join; part-side conjuncts prune the build side.",
     "q38_corpus_build": "Four composed operators, ONE documents scan: dedup window → fused langid UDF → JVM quality/token filters.",
+    "q50_stratified_sample": "Runs q05's two-phase shape (the same operators/politeness.py::two_phase_topk): Exchange (lang,_salt) then Exchange (lang) — a hot stratum never lands in one window task; the quota dim is broadcast and renamed to the private _quota, so an input quota column passes through.",
 }
 
 

@@ -30,14 +30,12 @@ def main() -> None:
     from bench import _fixture_dir, _warmup
     from crawlingathome_worker_spark.config import EngineConfig
     from crawlingathome_worker_spark.plans.wave import run_wave
-    from crawlingathome_worker_spark.session import get_spark
+    from crawlingathome_worker_spark.session import get_spark, worker_count
     from crawlingathome_worker_spark.state.snapshots import Warehouse
 
     fx_dir = _fixture_dir(scale)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="profile-wave", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
+    cpus = worker_count()
+    spark = get_spark(app_name="profile-wave", shuffle_partitions=cpus)
     _warmup(spark)
 
     wh_dir = tempfile.mkdtemp(
@@ -49,7 +47,7 @@ def main() -> None:
             default_host_budget=100_000, wave_seconds=0.0, dedup_mode="bloom"
         )
         links = spark.read.parquet(os.path.join(fx_dir, "wat_links.parquet")).repartition(
-            int(cpus)
+            cpus
         )
         robots = spark.read.parquet(os.path.join(fx_dir, "robots.parquet"))
         pairs = spark.read.parquet(os.path.join(fx_dir, "pairs.parquet"))
