@@ -729,7 +729,12 @@ def q44_streaming_hourly_finalized(spark, sf_dir):
     windows. Deterministic because the watermark after all data is processed
     is order-independent (a max), and Spark's no-data final micro-batch
     flushes every window the terminal watermark passed — the late-data
-    semantics themselves are pinned by tests/test_streaming_window.py."""
+    semantics themselves are pinned by tests/test_streaming_window.py.
+
+    The finalized windows (a few dozen rows) are collected into a local frame,
+    so the memory sink's table and the checkpoint directory are removed
+    before returning."""
+    import shutil
     import tempfile
     import uuid
 
@@ -741,19 +746,24 @@ def q44_streaming_hourly_finalized(spark, sf_dir):
     # source requires its basePath to be a directory, so address it through a
     # character-class glob — basePath resolves to sf_dir, matches only events
     path = os.path.join(sf_dir, "events.parque[t]")
-    q = (
-        hourly_event_counts_stream(spark, path)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        q.processAllAvailable()
+        q = (
+            hourly_event_counts_stream(spark, path)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        sink = spark.table(name)
+        return spark.createDataFrame(sink.collect(), sink.schema)
     finally:
-        q.stop()
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def q45_robots_rules(spark, sf_dir):

@@ -21,8 +21,9 @@ Plan here (and why there is NO second shuffle of the data):
    folds the foldable key away) and warns on every wave; Python over P ints
    is strictly cheaper than a WindowExec and warning-free.
 
-sample_id = start_id + offset[pid] + local_rank + 1 — first id is start_id + 1,
-matching the reference's pre-increment.
+sample_id = offset[pid] + local_rank + 1, where offset[pid] = start_id + the
+rows of the partitions before pid — first id is start_id + 1, matching the
+reference's pre-increment.
 """
 
 from __future__ import annotations
@@ -73,8 +74,10 @@ def assign_sample_ids(
     # foldable partitionBy key away, so even partitionBy(lit(0)) still warns
     # "No Partition Defined" every wave). P ≈ shuffle partition count — Python
     # arithmetic over P ints, no Spark job beyond the stats aggregate.
+    # start_id rides the broadcast offsets, not a literal in the projection:
+    # a literal compiles a new codegen class for every start_id (every wave).
     stats.sort(key=lambda r: r["_pid"])
-    off_rows, acc = [], 0
+    off_rows, acc = [], start_id
     for r in stats:
         off_rows.append((int(r["_pid"]), int(r["_mmin"]), acc))
         acc += int(r["_cnt"])
@@ -83,7 +86,7 @@ def assign_sample_ids(
         rdf.join(F.broadcast(offsets), "_pid")
         .withColumn(
             id_col,
-            F.lit(start_id) + F.col("_off") + (F.col("_mid") - F.col("_mmin")) + F.lit(1),
+            F.col("_off") + (F.col("_mid") - F.col("_mmin")) + F.lit(1),
         )
         .drop("_pid", "_mid", "_mmin", "_off")
     )

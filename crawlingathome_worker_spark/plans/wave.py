@@ -29,7 +29,8 @@ One resource owner, `_WaveLedger`, is created before anything is persisted.
 It owns the pool and the wave's job group, every persisted frame and every
 localCheckpoint (the new fold and the outgoing session cache), and releases
 each exactly once on one of three exits: commit, failure or a lost commit
-race. It also times every job, so each committed manifest carries `timing`.
+race. It also times every job and counts the wave's codegen compiles, so
+each committed manifest carries `timing` and the metrics table its totals.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from ..operators.fetch import classify_and_score, output_rows, simulated_fetch
 from ..operators.parse import parse_links
 from ..operators.politeness import politeness_split, robots_gate
 from ..operators.schedule import assign_sample_ids
+from ..session import codegen_compiles
 from ..state.bloom import STATE_SCHEMA as BLOOM_STATE_SCHEMA
 from ..state.bloom import bloom_add, bloom_fill_ratio, seen_gate_bloom
 from ..state.cuckoo import STATE_SCHEMA as CUCKOO_STATE_SCHEMA
@@ -188,10 +190,11 @@ class _WaveLedger:
 
     Every job runs through `run` (caller's thread) or `submit` (pool), which
     record its start offset and duration in `timing` next to the phase
-    times (`phase`)."""
+    times (`phase`) and the codegen compiles (`count_compiles`)."""
 
     def __init__(self, spark: SparkSession, wh: Warehouse):
         self.spark, self.wh = spark, wh
+        self.compiles0 = codegen_compiles(spark)
         self.t0 = self._mark = time.perf_counter()
         self.timing: dict = {"jobs": {}}
         self.frames: list[DataFrame] = []
@@ -216,6 +219,13 @@ class _WaveLedger:
         now = time.perf_counter()
         self.timing[f"{name}_s"] = round(now - self._mark, 4)
         self._mark = now
+
+    def count_compiles(self) -> int:
+        """Record in `timing` the whole-stage-codegen compiles since the wave
+        started. The counter is JVM-wide, so a concurrent query or wave in
+        the same driver adds to it."""
+        n = self.timing["codegen_compiles"] = codegen_compiles(self.spark) - self.compiles0
+        return n
 
     def _timed(self, label: str, fn, *a, **k):
         s = time.perf_counter()
@@ -732,8 +742,16 @@ def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
 
     # metrics table: totals (partition_id = -1) + per-partition lineage rows
     # (north_rule: per-partition fetched/filtered/rejected counters); needs
-    # the gathered counters, overlaps the remaining tail
+    # the gathered counters, overlaps the remaining tail. The compile count
+    # is taken here, so it covers the plan and stage A, and of stage B what
+    # compiled by now (a warm wave's compiles all fall in its prep).
+    t = led.timing
     metric_rows = [(wave_no, k, -1, int(v)) for k, v in counters.items()]
+    metric_rows += [
+        (wave_no, "prep_ms", -1, round(t["prep_s"] * 1000)),
+        (wave_no, "status_ms", -1, round(t["status_s"] * 1000)),
+        (wave_no, "codegen_compiles", -1, led.count_compiles()),
+    ]
     if fill is not None:
         metric_rows.append((wave_no, "bloom_fill_ppm", -1, int(round(fill * 1_000_000))))
     for stage, parts in manifest.get("lineage", {}).items():

@@ -3,6 +3,18 @@
 Sandbox runs local[N] single-JVM; the config choices (AQE, skew-join handling,
 Arrow execution, shuffle-partition sizing) are the ones that matter on a real
 1000-executor cluster too — nothing here is local-mode-only.
+
+A wave is ~45 small Spark jobs, so at fixture scale its time is fixed CPU per
+job and per task, not data work. Two settings remove platform costs the engine
+never asked for, without changing a plan or a result:
+
+- a whole-stage-codegen cache that holds every class a wave compiles, so the
+  next wave reuses them instead of compiling them again (`codegen_compiles`
+  counts the compiles);
+- the engine's Python worker daemon (`worker_daemon.py`), whose workers do not
+  re-read every zip archive on their path at the start of each task. Workers
+  import it from the package, so `get_spark` puts the package's parent
+  directory on the workers' PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -10,6 +22,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Compiled whole-stage-codegen classes the JVM keeps (Spark's default is 100).
+# A wave runs ~180 distinct classes, so at 100 each wave evicted the classes
+# the next wave reuses and recompiled ~170 of them. Distinct classes measured
+# with an unbounded cache: 199 in a perfbench crawl run, 457 in a traced one,
+# 113 in a dedup run, 438 in the sf0.1 bench.py suite. 2000 holds several
+# times the largest; a warm wave adds ~4 classes of its own literals, which
+# are never reused and so are the ones LRU evicts.
+CODEGEN_CACHE_ENTRIES = 2000
+
+# The package's parent directory: the worker daemon module must be importable
+# by Python workers whatever the driver's working directory is.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def worker_count() -> int:
@@ -23,6 +48,23 @@ def _driver_memory() -> str:
     spilling."""
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return os.environ.get("SPARK_DRIVER_MEM") or f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Whole-stage-codegen compiles so far (`CodegenMetrics`). The counter is
+    JVM-wide: every session and thread of the driver JVM adds to it."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def _ship_package_path(spark: SparkSession) -> None:
+    """Add the package's parent directory to the workers' PYTHONPATH. The
+    context's `environment` holds `spark.executorEnv.*` and is shipped with
+    every Python function to the worker daemon; an existing entry is kept."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PACKAGE_PARENT])
 
 
 def get_spark(
@@ -44,7 +86,7 @@ def get_spark(
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
-    return (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
         # Adaptive execution: runtime coalescing + skew-join splitting; on a real
@@ -88,5 +130,9 @@ def get_spark(
         .config("spark.local.dir", local_dir or "/tmp")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", "crawlingathome_worker_spark.worker_daemon")
         .getOrCreate()
     )
+    _ship_package_path(spark)
+    return spark

@@ -80,3 +80,15 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"sample_id", "host", "url"} <= set(df.columns)
+
+
+def test_q44_leaves_no_sink_table_or_checkpoint(spark):
+    import glob
+    import tempfile
+
+    ckpts = set(glob.glob(os.path.join(tempfile.gettempdir(), "q44_ckpt_*")))
+    rows = entrymod.queries()["q44_streaming_hourly_finalized"](spark, SF_DIR).collect()
+    assert rows
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("q44_sink_")]
+    assert set(glob.glob(os.path.join(tempfile.gettempdir(), "q44_ckpt_*"))) == ckpts
+    assert not [q.name for q in spark.streams.active]

@@ -4,9 +4,10 @@ Replicates bench.py's committed-wave loop (disjoint page_id shards, wave 1
 untimed) and prints each wave's own `timing` from its manifest: the phase
 wall times (prep = plan build incl. the sample-id job; status = stage A up to
 the status counts; gather = the rest of stage B, lineage and the metrics
-write) and every job's start offset and duration. The commit (manifest link)
-is the remainder of the wave's total. Use this to decide whether the
-remaining committed-vs-uncommitted delta is worth engineering.
+write), the codegen compiles up to the metrics write, and every job's start
+offset and duration. The commit (manifest link) is the remainder of the
+wave's total. Use this to decide whether the remaining committed-vs-
+uncommitted delta is worth engineering.
 
   python tools/profile_wave.py [fixture_scale]
 """
@@ -62,6 +63,7 @@ def main() -> None:
                 f"wave {m['wave_no']}: total={time.perf_counter() - t0:.3f}s"
                 f" prep={t['prep_s']:.3f}s status={t['status_s']:.3f}s"
                 f" gather={t['gather_s']:.3f}s"
+                f" codegen_compiles={t['codegen_compiles']}"
                 f" scheduled={m['counters']['scheduled']}"
                 f" candidates={m['counters']['candidates']}"
             )
