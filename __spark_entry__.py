@@ -33,11 +33,12 @@ from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 
-# Stopword list for q18 — mirrored verbatim into the SQL oracle.
+# Stopword list for q18 and q01's blocklist (the parse stage's) — both
+# mirrored verbatim into the SQL oracles.
 from crawlingathome_worker_spark.functions.langid import STOPWORDS
+from crawlingathome_worker_spark.operators.parse import BLOCKLIST
 
 _EN_STOP = sorted(STOPWORDS["en"])
-_BLOCK = [".svg", ".gif", ".ico", "data:image", "javascript:", "mailto:"]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -133,7 +134,7 @@ def q01_url_blocklist(spark, sf_dir):
         F.explode(F.array(F.struct("link_id", "url"))).alias("_s")
     ).select("_s.link_id", "_s.url")
     low = F.lower(F.col("url"))
-    blocked = reduce(or_, [low.contains(b) for b in _BLOCK])
+    blocked = reduce(or_, [low.contains(b) for b in BLOCKLIST])
     return links.filter(~blocked & (F.length("url") <= 2048)).select("link_id", "url")
 
 
@@ -830,7 +831,7 @@ def q46_hashband_components(spark, sf_dir):
     comp = connected_components(edges)
     # comp IS the (eagerly materialized) checkpoint — hand it to the driver
     # as-is; releasing here would truncate the lineage under the pending
-    # compare. release_components(comp) is the receiving owner's cleanup call.
+    # compare. session.release_checkpoint(comp) is the receiving owner's cleanup call.
     return comp.select(F.col("node").alias("doc_id"), "component")
 
 

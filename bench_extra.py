@@ -14,6 +14,11 @@ Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py \
       --queries q20_minhash_lsh_pairs,q26_embedding_neardup \
       --runs 3 --tag before --plans-dir plans/r06
+Settling a suite delta with a larger sample (min-of-7 count() runs of the four
+queries round 3 adjudicated):
+  python bench_extra.py --queries \
+      q05_politeness_topk,q12_tpch_q5,q18_text_quality,q26_embedding_neardup \
+      --runs 7 --skip-noop
 Env contract matches bench.py: $SPARK_GRAFT_SF_DIR (default sf0.1),
 $SPARK_GRAFT_CPUS (default: the cores this process may run on; master
 local[$SPARK_GRAFT_CPUS]).

@@ -78,17 +78,6 @@ def decode(b: bytes) -> tuple[str, int, int, np.ndarray] | None:
         return None
 
 
-def decode_meta(b: bytes) -> tuple[str | None, int, int, bool]:
-    """Cheap metadata-only decode → (fmt, w, h, ok)."""
-    fmt = sniff_format(b)
-    if fmt is None:
-        return None, 0, 0, False
-    full = decode(b)
-    if full is None:
-        return None, 0, 0, False
-    return full[0], full[1], full[2], True
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB between two uint8 images."""
     diff = a.astype(np.float64) - b.astype(np.float64)

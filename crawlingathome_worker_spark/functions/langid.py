@@ -69,10 +69,3 @@ def detect_lang(text: str) -> str:
         return "en" if ascii_ratio >= 0.9 else "un"
     return best
 
-
-def english_score(text: str) -> float:
-    """Fraction of tokens that are English stopwords (quality-signal helper)."""
-    tokens = [t.lower() for t in _TOKEN_RE.findall(text)]
-    if not tokens:
-        return 0.0
-    return sum(1 for t in tokens if t in STOPWORDS["en"]) / len(tokens)

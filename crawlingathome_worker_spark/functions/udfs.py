@@ -1,11 +1,12 @@
 """Vectorized (Arrow-batched) pandas UDFs wrapping the shared semantics modules.
 
 Zero row-at-a-time Spark Python UDFs anywhere in the engine (input_hint mandate):
-every Python boundary is a pandas UDF / mapInPandas over Arrow batches. String
-semantics that Spark builtins cannot reproduce exactly (urljoin RFC 3986, ftfy-style
-repair, printable-class filtering — SURVEY.md §2.3 T1-T3, §2.7) live here; everything
-else (md5, lower, length, contains, explode, windows) stays JVM-side in
-whole-stage-codegen.
+every Python boundary is a pandas UDF / mapInPandas over Arrow batches. The parse
+stage's string semantics (urljoin RFC 3986, ftfy-style repair, canonical form,
+host — SURVEY.md §2.3 T1-T3, §2.7) run in ONE fused UDF, operators/parse.py
+`_enrich`; this module holds the column UDFs other operators share: language id
+and the CLIP-proxy text feature and score. Everything else (md5, lower, length,
+contains, explode, windows) stays JVM-side in whole-stage-codegen.
 """
 
 from __future__ import annotations
@@ -18,43 +19,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
 from .langid import detect_lang
-from .textfix import normalize_caption
-from .urls import absolutize, canonicalize, host_of
-
-
-@pandas_udf(StringType())
-def normalize_caption_udf(alt: pd.Series) -> pd.Series:
-    """T2: newline-flatten + fix_text + strip (crawlingathome.py:56)."""
-    return alt.map(normalize_caption, na_action="ignore")
 
 
 @pandas_udf(StringType())
 def detect_lang_udf(text: pd.Series) -> pd.Series:
     """F8: language id with printable-retry semantics (crawlingathome.py:58-63)."""
     return text.map(detect_lang, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def absolutize_udf(page_url: pd.Series, link_url: pd.Series) -> pd.Series:
-    """T3: urljoin(dirname(page_url), url) when not http-prefixed
-    (crawlingathome.py:47, 66-67)."""
-    out = [
-        absolutize(p, u) if isinstance(u, str) and isinstance(p, str) else None
-        for p, u in zip(page_url, link_url)
-    ]
-    return pd.Series(out, index=link_url.index)
-
-
-@pandas_udf(StringType())
-def canonicalize_udf(url: pd.Series) -> pd.Series:
-    """T6 (north_rule): RFC 3986 canonical form."""
-    return url.map(canonicalize, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    """Lowercase hostname (politeness partitioning key)."""
-    return url.map(host_of, na_action="ignore")
 
 
 # ---------------------------------------------------------------------------

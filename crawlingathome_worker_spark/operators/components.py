@@ -25,7 +25,7 @@ otherwise doubles per round and the round-10 plan would replay rounds 1-9
 on every executor retry (the checkpoint is also what bounds plan-compile
 time). Previous rounds' blocks are released through the JVM RDD handle —
 DataFrame.unpersist alone leaves localCheckpoint blocks resident
-(plans/wave.py:_release_checkpoint, found by the round-3 soak leak).
+(session.py:release_checkpoint, found by the round-3 soak leak).
 """
 
 from __future__ import annotations
@@ -33,15 +33,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release_checkpoint
+
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """→ distinct undirected edges as (u=min, v=max), self-loops dropped.
 
     Fails fast on non-integral id columns (ADVICE r5): the long cast below
     turns uncastable values into nulls, and the null filter would then
-    silently drop EVERY edge — component_keep_filter fed string image keys
-    would become a dedup no-op with no error. Arbitrary id types go through
-    component_members, which dense-ranks them to longs first."""
+    silently drop EVERY edge — string image keys would become a dedup no-op
+    with no error. Arbitrary id types go through component_members, which
+    dense-ranks them to longs first."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     integral = (ByteType, ShortType, IntegerType, LongType)
@@ -128,7 +130,7 @@ def connected_components(
         fp = nfp
     else:
         for f in prev_frames + [cur]:
-            release_components(f)
+            release_checkpoint(f)
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
     # fixpoint ⇒ stars: each canonical edge is (u=root, v=member); roots
     # label themselves
@@ -148,34 +150,20 @@ def connected_components(
         .count()
     )
     for f in prev_frames + [cur]:
-        release_components(f)
+        release_checkpoint(f)
     if bad:
-        release_components(result)
+        release_checkpoint(result)
         raise RuntimeError("connected_components: non-star fixpoint (labels not idempotent)")
     return result
-
-
-def release_components(df: DataFrame) -> None:
-    """Free a frame returned by connected_components when done with it.
-    Its blocks live at the RDD level (localCheckpoint), where plain
-    DataFrame.unpersist() is a no-op — same lesson as the session bloom
-    cache (plans/wave.py:_release_checkpoint, round-3 soak leak)."""
-    from ..plans.wave import _release_checkpoint  # deferred: no import cycle
-
-    _release_checkpoint(df)
-
-
-def component_representatives(components: DataFrame) -> DataFrame:
-    """→ the one kept node per component (the minimum id — matches the
-    keep-lowest rule of the pairwise drop operators)."""
-    return components.groupBy("component").agg(F.min("node").alias("node")).select("node")
 
 
 def component_members(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     """Non-representative members of every component, for ARBITRARY node-id
     types (string image keys, long doc ids, …) — the drop set of a
     transitive-safe dedup. Returns one column named `src` with the original
-    type, eagerly materialized (callers anti-join it lazily).
+    type, eagerly materialized as a localCheckpoint: callers anti-join it
+    lazily and release it (session.release_checkpoint) once whatever reads
+    it is materialized.
 
     Ordering parity with the greedy keep-lowest operators: nodes are mapped
     to dense longs by their RANK in native sort order (the scale-safe
@@ -202,27 +190,6 @@ def component_members(pairs: DataFrame, src: str, dst: str) -> DataFrame:
         .select(F.col("_orig").alias(src))
         .localCheckpoint(eager=True)
     )
-    release_components(comp)
+    release_checkpoint(comp)
     unpersist_sample_ids(mapped)
     return out
-
-
-def component_keep_filter(
-    df: DataFrame, pairs: DataFrame, id_col: str, src: str = "doc_a", dst: str = "doc_b"
-) -> DataFrame:
-    """Cluster-based near-dup drop: keep exactly the min-id member of each
-    connected component of the pair graph; rows not in any pair (singletons)
-    pass through. Unlike the greedy pairwise drop (drop doc_b of each pair),
-    this is transitive-safe: a chain A~B~C keeps exactly A even when A~C was
-    never emitted as a pair. Anti-join on the (tiny) non-root member set —
-    the corpus side never re-shuffles on anything but its own id."""
-    comp = connected_components(pairs, src=src, dst=dst)
-    # materialize the member set BEFORE releasing comp — the anti-join runs
-    # lazily later, and a released localCheckpoint cannot be recomputed
-    members = (
-        comp.where(F.col("node") != F.col("component"))
-        .select(F.col("node").alias(id_col))
-        .localCheckpoint(eager=True)
-    )
-    release_components(comp)
-    return df.join(members, id_col, "left_anti")

@@ -39,6 +39,14 @@ from pyspark.sql.types import (
 from .. import fakeimg, phash
 from ..config import EngineConfig
 
+MIN_IMAGE_BYTES = 5000  # F9, crawlingathome.py:103
+ALLOWED_FORMATS = ("JPEG", "PNG", "WEBP")  # crawlingathome.py:110
+# CLIP-proxy score gate of the wave (deterministic stub scorer, see
+# functions/udfs.py). -1.0 keeps every decoded image: the reference project
+# applied its CLIP threshold downstream, which plans/dataset.py's
+# score_threshold reproduces.
+CLIP_THRESHOLD = -1.0
+
 _DECODE_STRUCT = StructType(
     [
         StructField("w_dec", IntegerType()),
@@ -147,33 +155,19 @@ def classify_and_score(fetched: DataFrame, cfg: EngineConfig) -> DataFrame:
 
     Mirrors process_img_content's rejection ladder (crawlingathome.py:99-115) with
     the reference's exact thresholds, then the CLIP-similarity gate the project
-    ran downstream (README.md:8) as a deterministic proxy scorer.
+    ran downstream (README.md:8) as a deterministic proxy scorer. `cfg` is
+    the wave's config, which this stage does not read.
     """
     decoded = with_decoded(fetched, caption_col="caption")
     status = (
         F.when(F.col("bytes").isNull(), F.lit("error"))  # network failure → retryable
-        .when(F.length(F.col("bytes")) < cfg.min_image_bytes, F.lit("too_small"))  # F9 :103
+        .when(F.length(F.col("bytes")) < MIN_IMAGE_BYTES, F.lit("too_small"))  # F9 :103
         .when(~F.col("dec_ok"), F.lit("undecodable"))  # F10 decode :106
-        .when(~F.col("fmt_dec").isin(*cfg.allowed_formats), F.lit("bad_format"))  # :110
-        .when(F.col("score") < F.lit(cfg.clip_threshold), F.lit("low_score"))
+        .when(~F.col("fmt_dec").isin(*ALLOWED_FORMATS), F.lit("bad_format"))  # :110
+        .when(F.col("score") < F.lit(CLIP_THRESHOLD), F.lit("low_score"))
         .otherwise(F.lit("ok"))
     )
     return decoded.withColumn("fetch_status", status)
-
-
-OUTPUT_COLS = [
-    "image_id",
-    "bytes",
-    "w",
-    "h",
-    "fmt",
-    "caption",
-    "phash",
-    "sample_id",
-    "url",
-    "license",
-    "score",
-]
 
 
 def output_rows(classified: DataFrame) -> DataFrame:

@@ -46,12 +46,23 @@ CANDIDATE_COLS = [
     "pos",
 ]
 
+# F6 parse-stage blocklist — exact substrings from crawlingathome.py:40
+BLOCKLIST = (".svg", ".gif", ".ico", "data:image", "javascript:", "mailto:")
+MAX_URL_LEN = 2048  # F7, crawlingathome.py:74
+# Simulation shim: with no live network, a fetch is a join against the pairs
+# table on image_id. When the input (raw WAT lines) carries no image_id column,
+# it is recovered from the URL path by this regex — the stand-in for "the URL
+# identifies the image you GET".
+IMAGE_ID_REGEX = r"(img\d{8})"
+
 
 def parse_links(links: DataFrame, cfg: EngineConfig) -> DataFrame:
     """links: (page_id, page_url, pos, link_url, alt, image_id?) → candidates.
 
     Document order is (page_id, pos) — the materialized equivalent of the
-    reference's sequential line/link scan (SURVEY.md §2.4 J1).
+    reference's sequential line/link scan (SURVEY.md §2.4 J1). Every rule is
+    fixed reference semantics; `cfg` is the wave's config, which this stage
+    does not read.
     """
     derive_image_id = "image_id" not in links.columns
     if derive_image_id:
@@ -82,8 +93,8 @@ def parse_links(links: DataFrame, cfg: EngineConfig) -> DataFrame:
     df = df.withColumn("pair_md5", F.md5(F.concat(F.col("url"), F.col("caption"))))
     # F6 substring blocklist (crawlingathome.py:40, 71-73) + F7 length (74)
     low = F.lower(F.col("url"))
-    blocked = reduce(or_, [low.contains(b) for b in cfg.blocklist])
-    df = df.filter(~blocked).filter(F.length(F.col("url")) <= cfg.max_url_len)
+    blocked = reduce(or_, [low.contains(b) for b in BLOCKLIST])
+    df = df.filter(~blocked).filter(F.length(F.col("url")) <= MAX_URL_LEN)
 
     # J1: global first-occurrence-wins on the raw absolutized url, in document
     # order (crawlingathome.py:39, 74, 77).
@@ -95,9 +106,9 @@ def parse_links(links: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
     if derive_image_id:
         # raw-WAT inputs carry no FK — recover it from the URL (simulated-fetch
-        # shim, see EngineConfig.image_id_regex); no match ⇒ null ⇒ fetch error
+        # shim, see IMAGE_ID_REGEX); no match ⇒ null ⇒ fetch error
         df = df.withColumn(
-            "image_id", F.nullif(F.regexp_extract("url", cfg.image_id_regex, 1), F.lit(""))
+            "image_id", F.nullif(F.regexp_extract("url", IMAGE_ID_REGEX, 1), F.lit(""))
         )
     return df.select(*CANDIDATE_COLS)
 

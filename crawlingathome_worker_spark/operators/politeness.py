@@ -7,12 +7,12 @@ cap. The engine replaces that with explicit, deterministic scheduling:
 - robots rules are a small dim table → **broadcast join** on host (never a shuffle
   of the big side's dimension);
 - per-host budget from crawl_delay (budget = wave_seconds / delay, min 1);
-- priority key = md5(url ‖ wave ‖ seed): the *seeded* equivalent of the reference's
+- priority key = md5(url ‖ wave ‖ PRIORITY_SEED): the *seeded* equivalent of the reference's
   shuffle, deterministic and uniformly host-spreading (B2 contract);
 - per-host top-k via **two-phase window** (`two_phase_topk`: local top-k within
   (host, salt) buckets, then final top-k per host): the hot host that owns 30% of
   all URLs never lands in a single window task — the first phase cuts its row
-  count to salt_buckets × k before the per-host window runs. At 1000-executor
+  count to SALT_BUCKETS × k before the per-host window runs. At 1000-executor
   scale this is the difference between a straggler task with 30% of the wave and
   a balanced plan. The same function is operators/sampling.py's per-stratum
   quota.
@@ -27,6 +27,11 @@ from ..config import EngineConfig
 
 # private columns of two_phase_topk; an input carrying one is refused
 _TOPK_COLS = ("_salt", "_r1", "_r2")
+# the seed of the scheduling priority key (the reference shuffles unseeded)
+PRIORITY_SEED = 42
+# phase-1 salt buckets per group of two_phase_topk (SURVEY.md §4 O1): the hot
+# group's phase-2 window sees at most SALT_BUCKETS × limit rows
+SALT_BUCKETS = 16
 
 
 def parse_robots_txt(
@@ -103,12 +108,12 @@ def robots_gate(candidates: DataFrame, robots: DataFrame, cfg: EngineConfig) -> 
     )
 
 
-def with_priority(df: DataFrame, wave_no: int, cfg: EngineConfig) -> DataFrame:
+def with_priority(df: DataFrame, wave_no: int) -> DataFrame:
     """Deterministic seeded scheduling key — replaces random.shuffle
     (crawlingathome.py:238) with a reproducible uniform spread (B2)."""
     return df.withColumn(
         "priority_key",
-        F.md5(F.concat(F.col("url"), F.lit(f"|w{wave_no}|s{cfg.seed}"))),
+        F.md5(F.concat(F.col("url"), F.lit(f"|w{wave_no}|s{PRIORITY_SEED}"))),
     )
 
 
@@ -118,12 +123,11 @@ def two_phase_topk(
     order_cols: list[str],
     limit_col: str,
     salt_by: Column,
-    salt_buckets: int,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (kept, dropped): per `group_col`, the `limit_col` rows first in
     `order_cols` order, and every other row.
 
-    Phase 1 ranks within (group, pmod(xxhash64(salt_by), salt_buckets))
+    Phase 1 ranks within (group, pmod(xxhash64(salt_by), SALT_BUCKETS))
     buckets and keeps at most `limit_col` per bucket; phase 2 ranks the
     survivors per group. Identical result to a single per-group window (top-k
     is decomposable), but the hot group is never materialized in one task.
@@ -137,11 +141,11 @@ def two_phase_topk(
     if taken:
         raise ValueError(f"two_phase_topk: input already has private column(s) {taken}")
     limit = F.col(limit_col)
-    salt = F.pmod(F.xxhash64(salt_by), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(salt_by), F.lit(SALT_BUCKETS))
     # `dropped` is the union of the two rank complements — no anti-join back
     # on a key (the round-1 politeness plan re-shuffled the entire wave on url
     # and recomputed the frontier subtree). Phase 2 must rank ONLY phase-1
-    # survivors (at most salt_buckets × limit rows per group): ranking the full
+    # survivors (at most SALT_BUCKETS × limit rows per group): ranking the full
     # input per group would put the hot group's entire row set back into one
     # window task — the straggler the two-phase design exists to kill. The
     # union re-reads the upstream twice, which is cheap where it matters
@@ -168,9 +172,10 @@ def politeness_split(
     (priority_key, url), the two-phase salted top-k over (host, url-hash salt);
     deferred rows stay in the frontier for later waves. `host_budget` is
     constant per host (robots_gate derives it from the host's crawl delay),
-    which is the top-k's decomposability contract."""
-    df = with_priority(candidates, wave_no, cfg)
+    which is the top-k's decomposability contract. `cfg` is the wave's
+    config, which this stage does not read (the budget arrives as a column)."""
+    df = with_priority(candidates, wave_no)
     scheduled, deferred = two_phase_topk(
-        df, "host", ["priority_key", "url"], "host_budget", F.col("url"), cfg.salt_buckets
+        df, "host", ["priority_key", "url"], "host_budget", F.col("url")
     )
     return scheduled, deferred.drop("priority_key")

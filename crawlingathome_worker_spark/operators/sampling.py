@@ -27,7 +27,6 @@ def stratified_sample(
     quotas: DataFrame,
     id_col: str,
     seed: int = 42,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Keep per stratum the `quota` rows ranking lowest by
     md5(id ‖ seed) (ties broken by id — total order, so membership is
@@ -44,6 +43,6 @@ def stratified_sample(
     dim = quotas.select(stratum_col, F.col("quota").alias("_quota"))
     d = df.join(F.broadcast(dim), stratum_col).withColumn("_k", key)
     kept, _ = two_phase_topk(
-        d, stratum_col, ["_k", id_col], "_quota", F.col(id_col).cast("string"), salt_buckets
+        d, stratum_col, ["_k", id_col], "_quota", F.col(id_col).cast("string")
     )
     return kept.select(*df.columns)

@@ -99,6 +99,14 @@ def with_lsh_signature(
     return df.withColumn("lsh_sig", sig_udf(F.col(vec_col)))
 
 
+def _probe_sigs(q: np.ndarray, n_planes: int, seed: int, multiprobe: bool) -> list[int]:
+    """The query's LSH signature, then (multiprobe) every signature one bit
+    away — the buckets an LSH query scans."""
+    planes = _planes(len(q), n_planes, seed)
+    qsig = int(((q @ planes.T) > 0).astype(np.int64) @ (1 << np.arange(n_planes)))
+    return [qsig] + ([qsig ^ (1 << b) for b in range(n_planes)] if multiprobe else [])
+
+
 def lsh_bucketed_topk(
     df: DataFrame,
     query: np.ndarray,
@@ -113,9 +121,7 @@ def lsh_bucketed_topk(
     query's (or differs by one bit with multiprobe). Recall improves with
     multiprobe at the cost of (n_planes+1)× bucket reads — still ≪ full scan."""
     q = np.asarray(query, dtype=np.float64)
-    planes = _planes(len(q), n_planes, seed)
-    qsig = int(((q @ planes.T) > 0).astype(np.int64) @ (1 << np.arange(n_planes)))
-    sigs = [qsig] + ([qsig ^ (1 << b) for b in range(n_planes)] if multiprobe else [])
+    sigs = _probe_sigs(q, n_planes, seed, multiprobe)
     sigged = with_lsh_signature(df, len(q), n_planes, seed, vec_col)
     bucket = sigged.filter(F.col("lsh_sig").isin(sigs))
     return brute_force_topk(bucket, q, k, vec_col, id_col)
@@ -153,9 +159,7 @@ def lsh_topk_pruned(
     FILE level (assert `PartitionFilters` in the scan), so a query touches
     (n_planes+1)/2^n_planes of the data instead of scanning the world."""
     q = np.asarray(query, dtype=np.float64)
-    planes = _planes(len(q), n_planes, seed)
-    qsig = int(((q @ planes.T) > 0).astype(np.int64) @ (1 << np.arange(n_planes)))
-    sigs = [qsig] + ([qsig ^ (1 << b) for b in range(n_planes)] if multiprobe else [])
+    sigs = _probe_sigs(q, n_planes, seed, multiprobe)
     stored = spark.read.parquet(path).filter(F.col("lsh_sig").isin(sigs))
     return brute_force_topk(stored, q, k, vec_col, id_col)
 
@@ -218,6 +222,13 @@ def with_ivf_cell(
     return df.withColumn("ivf_cell", cell_udf(F.col(vec_col)))
 
 
+def _probe_cells(centroids: np.ndarray, q: np.ndarray, n_probe: int) -> list[int]:
+    """The n_probe IVF cells nearest to the query (stable on ties)."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    d = ((cents - q[None, :]) ** 2).sum(axis=1)
+    return [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+
+
 def ivf_topk(
     df: DataFrame,
     centroids: np.ndarray,
@@ -228,11 +239,9 @@ def ivf_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF ANN: score only the n_probe cells nearest to the query."""
-    cents = np.asarray(centroids, dtype=np.float64)
     q = np.asarray(query, dtype=np.float64)
-    d = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
-    celled = with_ivf_cell(df, cents, vec_col)
+    probe = _probe_cells(centroids, q, n_probe)
+    celled = with_ivf_cell(df, centroids, vec_col)
     return brute_force_topk(celled.filter(F.col("ivf_cell").isin(probe)), q, k, vec_col, id_col)
 
 
@@ -261,10 +270,8 @@ def ivf_topk_pruned(
 ) -> DataFrame:
     """ANN over the partitioned store: the cell filter prunes at the FILE level
     (assert `PartitionFilters` in the scan — tests/test_multimodal.py)."""
-    cents = np.asarray(centroids, dtype=np.float64)
     q = np.asarray(query, dtype=np.float64)
-    d = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+    probe = _probe_cells(centroids, q, n_probe)
     stored = spark.read.parquet(path).filter(F.col("ivf_cell").isin(probe))
     return brute_force_topk(stored, q, k, vec_col, id_col)
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.imagededup import phash_dedup, phash_near_pairs
 from ..operators.textdedup import minhash_lsh_pairs, minhash_signatures
+from ..session import release_checkpoint
 from ..state.snapshots import Warehouse
 
 
@@ -37,8 +38,11 @@ def finalize_pairs(
     """The LAZY finalization composition over any pairs_out-shaped frame
     (columns: id_col, phash, caption, score, …passthrough). Returns the
     per-stage frames {raw, exact, img_clean, deduped, final} so callers can
-    persist/count whichever stages they report on. `id_col` may be any
-    orderable type — keep-lowest rules compare in its native order.
+    persist/count whichever stages they report on, plus `drop_sets`: the
+    component strategy's materialized drop sets (localCheckpoints, empty for
+    greedy), which whoever materializes `final` releases with
+    session.release_checkpoint. `id_col` may be any orderable type —
+    keep-lowest rules compare in its native order.
 
     dedup_strategy governs BOTH near-dup stages:
       "greedy"    — drop the higher id of each pair (the historical rule;
@@ -53,6 +57,7 @@ def finalize_pairs(
     if dedup_strategy not in ("greedy", "component"):
         raise ValueError(f"unknown dedup_strategy: {dedup_strategy!r}")
     id_type = dict(raw.dtypes)[id_col]
+    drop_sets: list[DataFrame] = []
 
     def _drop_set(pairs: DataFrame, a: str, b: str, out_type: str) -> DataFrame:
         """Pair graph → the ids to drop, one column named id_col."""
@@ -68,9 +73,9 @@ def finalize_pairs(
             typed = pairs.select(
                 F.col(a).cast(out_type).alias(a), F.col(b).cast(out_type).alias(b)
             )
-            return component_members(typed, src=a, dst=b).select(
-                F.col(a).alias(id_col)
-            )
+            members = component_members(typed, src=a, dst=b)
+            drop_sets.append(members)
+            return members.select(F.col(a).alias(id_col))
         return pairs.select(
             F.greatest(F.col(a).cast(out_type), F.col(b).cast(out_type)).alias(id_col)
         ).distinct()
@@ -104,6 +109,7 @@ def finalize_pairs(
         "img_clean": img_clean,
         "deduped": deduped,
         "final": final,
+        "drop_sets": drop_sets,
     }
 
 
@@ -120,8 +126,9 @@ def build_training_set(
 
     The returned frame is PERSISTED (the stats counts already materialized it);
     the caller unpersists when done. Intermediate stages are persisted during
-    the stats pass and released before returning — without that, each count()
-    would recompute the MinHash/banding pipelines from scratch."""
+    the stats pass and released before returning (without the persist, each
+    count() would recompute the MinHash/banding pipelines from scratch); so
+    are the component strategy's checkpointed drop sets."""
     latest = wh.latest()
     if latest is None or not latest["tables"].get("pairs_out"):
         raise ValueError("warehouse has no committed pairs_out — run waves first")
@@ -153,6 +160,8 @@ def build_training_set(
     }
     for frame in (raw, exact, img_clean, deduped):
         frame.unpersist()
+    for frame in stages["drop_sets"]:
+        release_checkpoint(frame)
     return final, stats
 
 

@@ -36,7 +36,6 @@ each committed manifest carries `timing` and the metrics table its totals.
 from __future__ import annotations
 
 import logging
-import threading
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
@@ -51,7 +50,7 @@ from ..operators.fetch import classify_and_score, output_rows, simulated_fetch
 from ..operators.parse import parse_links
 from ..operators.politeness import politeness_split, robots_gate
 from ..operators.schedule import assign_sample_ids
-from ..session import codegen_compiles
+from ..session import codegen_compiles, release_checkpoint
 from ..state.bloom import STATE_SCHEMA as BLOOM_STATE_SCHEMA
 from ..state.bloom import bloom_add, bloom_fill_ratio, seen_gate_bloom
 from ..state.cuckoo import STATE_SCHEMA as CUCKOO_STATE_SCHEMA
@@ -64,6 +63,12 @@ FRONTIER_SCHEMA = (
 )
 SEEN_SCHEMA = "pair_md5 string, kind string"
 RETRY_SCHEMA = "pair_md5 string"
+# Saturation alarm: a committed bloom wave whose parsed bloom's fill ratio
+# (set bits vs the DESIGN total) passes this WARNs — an over-filled bloom
+# silently raises FPR, and a false "seen" silently drops candidates forever.
+# An optimally sized filter at rated capacity is 1 - e^(-ln 2) = 0.5 full, so
+# crossing 0.5 means the filter is at or beyond design capacity.
+BLOOM_WARN_FILL = 0.5
 
 
 def _obs_count(obs: Observation, df: DataFrame) -> int:
@@ -74,14 +79,6 @@ def _obs_count(obs: Observation, df: DataFrame) -> int:
         return int(obs.get["n"])
     except Exception:
         return df.count()
-
-
-_release_warned = False
-
-# serializes the log4j level raise/restore inside _release_checkpoint —
-# concurrent pool-thread releases must not capture another release's ERROR
-# as their "previous" level (ADVICE r5)
-_LOG4J_LOCK = threading.Lock()
 
 
 def _fold_ckpt(df: DataFrame) -> DataFrame:
@@ -99,65 +96,8 @@ def _fold_ckpt(df: DataFrame) -> DataFrame:
         ck.count()
         return ck
     except BaseException:
-        _release_checkpoint(ck)
+        release_checkpoint(ck)
         raise
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint'ed frame's blocks. DataFrame.unpersist() only
-    clears the CacheManager entry; the checkpoint RDD is persisted at the RDD
-    level (outside the CacheManager) and stays resident until released through
-    the LogicalRDD plan node — without this, the session bloom cache leaked
-    one checkpointed RDD's blocks per committed wave (tests/test_soak.py).
-
-    The release path leans on private JVM internals (queryExecution → analyzed
-    → rdd), so a Spark upgrade that changes the plan shape would silently turn
-    every release back into that leak — when it throws, WARN loudly (once per
-    process) so the regression is visible the day it happens, but never fail
-    the wave on cleanup."""
-    global _release_warned
-    try:
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        # Unpersisting a locally-checkpointed RDD makes Spark WARN that the
-        # lineage is gone — here that is the POINT (the fold is released only
-        # after its successor is committed and durable), and one expected line
-        # per committed wave buries real warnings in a thousand-wave log
-        # (VERDICT r4 item 3). Scope an ERROR-level rule on exactly the
-        # emitting logger around the unpersist; restore afterwards. If the
-        # log4j API shape changes, degrade to the noisy-but-correct release.
-        # The raise→unpersist→restore window is serialized by _LOG4J_LOCK
-        # (ADVICE r5): releases run concurrently from pool threads, and an
-        # unlocked interleave could read ERROR as a thread's "prev" level and
-        # restore it last — permanently suppressing genuine warnings from
-        # that logger, not just leaking one line.
-        with _LOG4J_LOCK:
-            prev = None
-            try:
-                log4j = df.sparkSession._jvm.org.apache.logging.log4j
-                lname = "org.apache.spark.rdd.MapPartitionsRDD"
-                prev = log4j.LogManager.getLogger(lname).getLevel()
-                log4j.core.config.Configurator.setLevel(lname, log4j.Level.ERROR)
-            except Exception:
-                prev = None
-            try:
-                jrdd.unpersist(False)
-            finally:
-                if prev is not None:
-                    try:
-                        log4j.core.config.Configurator.setLevel(lname, prev)
-                    except Exception:
-                        pass
-    except Exception as e:
-        if not _release_warned:
-            _release_warned = True
-            logging.getLogger(__name__).warning(
-                "localCheckpoint release failed (%s: %s) — the session bloom "
-                "cache will LEAK one checkpointed RDD's blocks per committed "
-                "wave until plans/wave.py:_release_checkpoint is adapted to "
-                "this Spark version",
-                type(e).__name__,
-                e,
-            )
 
 
 def _lineage(df: DataFrame) -> list[dict]:
@@ -276,7 +216,7 @@ class _WaveLedger:
             old = getattr(self.wh, "_bloom_session_cache", None)
             self.wh._bloom_session_cache = {"snap": snap_id, "df": cache_df}
             if old is not None and old["df"] is not cache_df:
-                _release_checkpoint(old["df"])
+                release_checkpoint(old["df"])
         self._unpersist_frames()
 
     def fail(self) -> None:
@@ -324,13 +264,13 @@ class _WaveLedger:
     def _discard(self, evict: bool) -> None:
         if self.fold_future is not None:
             try:
-                _release_checkpoint(self.fold_future.result())
+                release_checkpoint(self.fold_future.result())
             except Exception:
                 pass  # the fold failed or was cancelled: _fold_ckpt released it
         stale = getattr(self.wh, "_bloom_session_cache", None) if evict else None
         if stale is not None:
             self.wh._bloom_session_cache = None
-            _release_checkpoint(stale["df"])
+            release_checkpoint(stale["df"])
         self._unpersist_frames()
 
     def _unpersist_frames(self) -> None:
@@ -723,14 +663,14 @@ def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
     if fill is not None:
         fill = round(float(fill), 6)  # one rounding, shared by manifest + ppm row
         manifest["bloom_fill_ratio"] = fill
-        if fill > cfg.bloom_warn_fill:
+        if fill > BLOOM_WARN_FILL:
             logging.getLogger(__name__).warning(
                 "parsed bloom fill ratio %.3f exceeds %.2f — the filter is "
                 "at/beyond design capacity, its FPR is degrading and false "
                 "\"seen\" verdicts will silently drop candidates; recompact "
                 "into a larger BloomParams.capacity",
                 fill,
-                cfg.bloom_warn_fill,
+                BLOOM_WARN_FILL,
             )
     if cfg.dedup_mode == "bloom":
         # a cuckoo rewrite may have emptied it by deletions, but claiming

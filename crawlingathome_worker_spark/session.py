@@ -15,13 +15,18 @@ never asked for, without changing a plan or a result:
   re-read every zip archive on their path at the start of each task. Workers
   import it from the package, so `get_spark` puts the package's parent
   directory on the workers' PYTHONPATH.
+
+The two helpers that reach into JVM internals live here too, below both the
+operators and the plans: `codegen_compiles` and `release_checkpoint`.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Compiled whole-stage-codegen classes the JVM keeps (Spark's default is 100).
 # A wave runs ~180 distinct classes, so at 100 each wave evicted the classes
@@ -55,6 +60,71 @@ def codegen_compiles(spark: SparkSession) -> int:
     JVM-wide: every session and thread of the driver JVM adds to it."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+_release_warned = False
+
+# serializes the log4j level raise/restore inside release_checkpoint —
+# concurrent pool-thread releases must not capture another release's ERROR
+# as their "previous" level (ADVICE r5)
+_LOG4J_LOCK = threading.Lock()
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free a localCheckpoint'ed frame's blocks. DataFrame.unpersist() only
+    clears the CacheManager entry; the checkpoint RDD is persisted at the RDD
+    level (outside the CacheManager) and stays resident until released through
+    the LogicalRDD plan node — without this, the session bloom cache leaked
+    one checkpointed RDD's blocks per committed wave (tests/test_soak.py).
+
+    The release path leans on private JVM internals (queryExecution → analyzed
+    → rdd), so a Spark upgrade that changes the plan shape would silently turn
+    every release back into that leak — when it throws, WARN loudly (once per
+    process) so the regression is visible the day it happens, but never fail
+    the caller on cleanup."""
+    global _release_warned
+    try:
+        jrdd = df._jdf.queryExecution().analyzed().rdd()
+        # Unpersisting a locally-checkpointed RDD makes Spark WARN that the
+        # lineage is gone — here that is the POINT (the fold is released only
+        # after its successor is committed and durable), and one expected line
+        # per committed wave buries real warnings in a thousand-wave log
+        # (VERDICT r4 item 3). Scope an ERROR-level rule on exactly the
+        # emitting logger around the unpersist; restore afterwards. If the
+        # log4j API shape changes, degrade to the noisy-but-correct release.
+        # The raise→unpersist→restore window is serialized by _LOG4J_LOCK
+        # (ADVICE r5): releases run concurrently from pool threads, and an
+        # unlocked interleave could read ERROR as a thread's "prev" level and
+        # restore it last — permanently suppressing genuine warnings from
+        # that logger, not just leaking one line.
+        with _LOG4J_LOCK:
+            prev = None
+            try:
+                log4j = df.sparkSession._jvm.org.apache.logging.log4j
+                lname = "org.apache.spark.rdd.MapPartitionsRDD"
+                prev = log4j.LogManager.getLogger(lname).getLevel()
+                log4j.core.config.Configurator.setLevel(lname, log4j.Level.ERROR)
+            except Exception:
+                prev = None
+            try:
+                jrdd.unpersist(False)
+            finally:
+                if prev is not None:
+                    try:
+                        log4j.core.config.Configurator.setLevel(lname, prev)
+                    except Exception:
+                        pass
+    except Exception as e:
+        if not _release_warned:
+            _release_warned = True
+            logging.getLogger(__name__).warning(
+                "localCheckpoint release failed (%s: %s) — the session bloom "
+                "cache will LEAK one checkpointed RDD's blocks per committed "
+                "wave until session.py:release_checkpoint is adapted to "
+                "this Spark version",
+                type(e).__name__,
+                e,
+            )
 
 
 def _ship_package_path(spark: SparkSession) -> None:

@@ -72,10 +72,6 @@ def write_bucketed_pairs(
     )
 
 
-def read_bucketed_pairs(spark: SparkSession, table: str = "pairs_bucketed") -> DataFrame:
-    return spark.table(table)
-
-
 def _register_existing(spark: SparkSession, table: str, buckets: int, loc: str) -> None:
     """Re-attach an already-ingested bucketed directory to THIS session's
     catalog. The catalog is in-memory (no Hive metastore in-sandbox), so a

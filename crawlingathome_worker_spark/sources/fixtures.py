@@ -92,7 +92,7 @@ def gen_pairs(out_dir: str, scale: float = 1.0, seed: int = 42) -> None:
             fmt = str(rng.choice(_FMTS, p=_FMT_P))
         prev_img, prev_fmt = img, fmt
         if rng.random() < 0.01:
-            # corrupt blob: valid PNG magic, garbage stream, and ≥ min_image_bytes
+            # corrupt blob: valid PNG magic, garbage stream, and ≥ MIN_IMAGE_BYTES
             # so it reaches the DECODE stage and fails there (not at the size gate)
             b = fakeimg.MAGIC["PNG"] + bytes(rng.integers(0, 256, size=6000, dtype=np.uint8))
         else:

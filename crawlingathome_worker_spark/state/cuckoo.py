@@ -10,7 +10,7 @@ operators/dedup.py).
 
 Standard (2,4)-cuckoo: 16-bit fingerprints, 4 slots/bucket, two candidate buckets
 i1 = h(key) mod B and i2 = i1 XOR h(fp) (B a power of two), eviction walk up to
-max_kicks. State is a table (part, table:binary of uint16) co-partitioned the
+MAX_KICKS. State is a table (part, table:binary of uint16) co-partitioned the
 same way as the bloom. Mutation batches are small (retry slots only), so the
 per-key insert walk inside each partition's Arrow batch is cheap; membership is
 fully vectorized numpy.
@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from ..config import CuckooParams
 
 STATE_SCHEMA = "part int, tbl binary"
+SLOTS_PER_BUCKET = 4
+MAX_KICKS = 500
 _MUL = np.uint64(0x5BD1E995)
 
 
@@ -52,7 +54,7 @@ def _fp_and_buckets(ch: np.ndarray, nbuckets: int):
 
 
 def empty_cuckoo(spark: SparkSession, params: CuckooParams) -> DataFrame:
-    size = params.buckets_per_partition * params.slots_per_bucket * 2  # uint16 bytes
+    size = params.buckets_per_partition * SLOTS_PER_BUCKET * 2  # uint16 bytes
     rows = [(p, bytes(size)) for p in range(params.partitions)]
     return spark.createDataFrame(rows, STATE_SCHEMA)
 
@@ -60,7 +62,7 @@ def empty_cuckoo(spark: SparkSession, params: CuckooParams) -> DataFrame:
 def cuckoo_table(blob: bytes, params: CuckooParams) -> np.ndarray:
     """A partition's state blob as a read-only (buckets, slots) uint16 view."""
     return np.frombuffer(blob, dtype=np.uint16).reshape(
-        params.buckets_per_partition, params.slots_per_bucket
+        params.buckets_per_partition, SLOTS_PER_BUCKET
     )
 
 
@@ -73,7 +75,7 @@ def cuckoo_contains(tbl: np.ndarray, ch: np.ndarray, nbuckets: int) -> np.ndarra
 def _load_tbl(right: pd.DataFrame, params: CuckooParams) -> tuple[int | None, np.ndarray]:
     if len(right) == 0:
         return None, np.zeros(
-            (params.buckets_per_partition, params.slots_per_bucket), dtype=np.uint16
+            (params.buckets_per_partition, SLOTS_PER_BUCKET), dtype=np.uint16
         )
     return int(right["part"].iat[0]), cuckoo_table(right["tbl"].iat[0], params).copy()
 
@@ -92,7 +94,6 @@ def cuckoo_update(
     dels = _with_hash_cols((deletes if deletes is not None else empty).select(key).distinct(), key, params).withColumn("_op", F.lit(0))
     ops = dels.unionByName(ins)
     B = params.buckets_per_partition
-    kicks = params.max_kicks
     rng_seed = 0x9E3779B9
 
     def apply_ops(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -129,8 +130,8 @@ def cuckoo_update(
                     if placed:
                         continue
                     cur_f, cur_b = f, x
-                    for _ in range(kicks):  # eviction walk
-                        s = int(rng.integers(params.slots_per_bucket))
+                    for _ in range(MAX_KICKS):  # eviction walk
+                        s = int(rng.integers(SLOTS_PER_BUCKET))
                         cur_f, tbl[cur_b, s] = int(tbl[cur_b, s]), cur_f
                         alt = (cur_b ^ int((np.uint64(cur_f) * _MUL) & np.uint64(B - 1)))
                         free = np.nonzero(tbl[alt] == 0)[0]

@@ -50,78 +50,3 @@ def host_quota_limiter(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant of the same operator.
-#
-# applyInPandasWithState (above) is the stable API; transformWithState is its
-# Spark-4 successor — typed state handles (ValueState/ListState/MapState),
-# timers, TTL, and the RocksDB store REQUIRED (the HDFS-backed store does not
-# implement the new state API). Same semantics here: cumulative per-host cap.
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - import guard for older runtimes / missing deps
-    import google.protobuf  # noqa: F401  (TWS state-API client speaks protobuf)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover
-    # This container ships pyspark 4.1.2 (which HAS the API) but no protobuf,
-    # so the TWS python worker cannot start here. The implementation below is
-    # the real production path and activates as soon as protobuf exists —
-    # declared-stub policy, same as the multimodal decode backends.
-    StatefulProcessor = object  # type: ignore[assignment]
-    HAS_TWS = False
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-class HostQuotaProcessor(StatefulProcessor):
-    """Cumulative per-host quota as a typed StatefulProcessor."""
-
-    def __init__(self, quota: int, order_cols: tuple[str, ...]):
-        self._quota = quota
-        self._order_cols = list(order_cols)
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState("scheduled_total", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        total = self._state.get()[0] if self._state.exists() else 0
-        batch = pd.concat(list(rows), ignore_index=True)
-        batch = batch.sort_values(self._order_cols, kind="mergesort")
-        allowed = batch.head(max(0, self._quota - total))
-        self._state.update((total + len(allowed),))
-        yield allowed
-
-    def close(self) -> None:
-        pass
-
-
-def host_quota_limiter_tws(
-    events: DataFrame, quota: int, order_cols: tuple[str, ...] = ("priority_key", "url")
-) -> DataFrame:
-    """transformWithStateInPandas version of host_quota_limiter. The session
-    must run the RocksDB state store (set
-    spark.sql.streaming.stateStore.providerClass to ROCKSDB_PROVIDER before
-    starting the query); semantics are identical to the applyInPandasWithState
-    path and the test asserts output equality between the two."""
-    if not HAS_TWS:  # pragma: no cover
-        raise NotImplementedError(
-            "transformWithStateInPandas unavailable: pyspark's typed-state API "
-            "or its protobuf dependency is missing in this environment "
-            "(pip install protobuf enables it; the applyInPandasWithState "
-            "path above is the drop-in equivalent)"
-        )
-    return events.groupBy("host").transformWithStateInPandas(
-        statefulProcessor=HostQuotaProcessor(quota, order_cols),
-        outputStructType=events.schema,
-        outputMode="append",
-        timeMode="none",
-    )

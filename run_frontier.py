@@ -39,11 +39,6 @@ def main() -> None:
         "--robots-agent", default="cah-worker",
         help="product token for robots group matching (with --robots-txt)",
     )
-    ap.add_argument(
-        "--plain-pairs", action="store_true",
-        help="fetch-join against the raw pairs parquet instead of the bucketed "
-        "store (debug only: re-shuffles the bytes side every wave)",
-    )
     ap.add_argument("--buckets", type=int, default=32, help="pairs_bucketed bucket count")
     ap.add_argument(
         "--ingest-only", action="store_true",
@@ -101,24 +96,19 @@ def main() -> None:
     wh = Warehouse(args.warehouse)
     links = spark.read.parquet(os.path.join(fx, "wat_links.parquet"))
     pairs_path = os.path.join(fx, "pairs.parquet")
-    if args.ingest_only:
-        from crawlingathome_worker_spark.sources.bucketed import ensure_bucketed_pairs
+    # one-time bucketed ingest (or attach to the table a previous --ingest-only
+    # run wrote); every wave's fetch join then reads the bytes side
+    # shuffle-free (hash partitioning is a physical property of the table —
+    # sources/bucketed.py). At the 100 TB design point this is the difference
+    # between a per-wave 100 TB shuffle and none.
+    from crawlingathome_worker_spark.sources.bucketed import ensure_bucketed_pairs
 
-        df = ensure_bucketed_pairs(spark, pairs_path, buckets=args.buckets)
-        print(json.dumps({"ingested": "pairs_bucketed", "rows": df.count(),
+    pairs = ensure_bucketed_pairs(spark, pairs_path, buckets=args.buckets)
+    if args.ingest_only:
+        print(json.dumps({"ingested": "pairs_bucketed", "rows": pairs.count(),
                           "buckets": args.buckets}))
         spark.stop()
         return
-    if args.plain_pairs:
-        pairs = spark.read.parquet(pairs_path)
-    else:
-        # DEFAULT: one-time bucketed ingest; every wave's fetch join then reads
-        # the bytes side shuffle-free (hash partitioning is a physical property
-        # of the table — sources/bucketed.py). At the 100 TB design point this
-        # is the difference between a per-wave 100 TB shuffle and none.
-        from crawlingathome_worker_spark.sources.bucketed import ensure_bucketed_pairs
-
-        pairs = ensure_bucketed_pairs(spark, pairs_path, buckets=args.buckets)
     if args.robots_txt:
         # real-world path: raw fetched robots.txt bodies (host, body) parsed
         # to gate-ready rules in-process (pinned RFC 9309 subset —

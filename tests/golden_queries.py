@@ -37,6 +37,7 @@ from crawlingathome_worker_spark.config import EngineConfig
 from crawlingathome_worker_spark.functions.langid import detect_lang
 from crawlingathome_worker_spark.functions.udfs import text_feature
 from crawlingathome_worker_spark.functions.urls import path_of
+from crawlingathome_worker_spark.operators.politeness import PRIORITY_SEED
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _M61 = (1 << 61) - 1
@@ -503,7 +504,7 @@ def g30_wave_flagship(sf_dir: str, fx_dir: str) -> pa.Table:
         return min(cfg.default_host_budget, max(1, int(cfg.wave_seconds // delay)))
 
     for c in allowed:
-        c.priority_key = hashlib.md5(f"{c.url}|w1|s{cfg.seed}".encode()).hexdigest()
+        c.priority_key = hashlib.md5(f"{c.url}|w1|s{PRIORITY_SEED}".encode()).hexdigest()
     by_host: dict[str, list] = {}
     for c in allowed:
         by_host.setdefault(c.host, []).append(c)

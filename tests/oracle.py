@@ -18,6 +18,9 @@ from crawlingathome_worker_spark.functions.langid import detect_lang
 from crawlingathome_worker_spark.functions.textfix import normalize_caption
 from crawlingathome_worker_spark.functions.udfs import text_feature
 from crawlingathome_worker_spark.functions.urls import absolutize, canonicalize, host_of, path_of
+from crawlingathome_worker_spark.operators.fetch import ALLOWED_FORMATS, CLIP_THRESHOLD, MIN_IMAGE_BYTES
+from crawlingathome_worker_spark.operators.parse import BLOCKLIST, MAX_URL_LEN
+from crawlingathome_worker_spark.operators.politeness import PRIORITY_SEED
 
 
 @dataclass
@@ -70,11 +73,11 @@ def oracle_parse(links: list[dict], cfg: EngineConfig, wave_no: int) -> list[Can
                 continue
             url = absolutize(r["page_url"], r["link_url"])  # :66-67
             pair_md5 = md5_hex(url + caption)  # :68
-            if any(bl in url.lower() for bl in cfg.blocklist):  # :71-73
+            if any(bl in url.lower() for bl in BLOCKLIST):  # :71-73
                 continue
             if url in seen_urls:  # :74 (J1)
                 continue
-            if len(url) > cfg.max_url_len:  # :74
+            if len(url) > MAX_URL_LEN:  # :74
                 continue
             seen_urls.add(url)  # :77
             out.append(
@@ -146,7 +149,7 @@ def oracle_wave(
 
     # politeness top-k per host (O1)
     for c in allowed:
-        c.priority_key = md5_hex(f"{c.url}|w{wave_no}|s{cfg.seed}")
+        c.priority_key = md5_hex(f"{c.url}|w{wave_no}|s{PRIORITY_SEED}")
     scheduled: list[Candidate] = []
     deferred: list[Candidate] = []
     by_host: dict[str, list[Candidate]] = {}
@@ -170,7 +173,7 @@ def oracle_wave(
         if b is None:
             c.fetch_status = "error"
             continue
-        if len(b) < cfg.min_image_bytes:
+        if len(b) < MIN_IMAGE_BYTES:
             c.fetch_status = "too_small"
             continue
         dec = fakeimg.decode(b)
@@ -178,13 +181,13 @@ def oracle_wave(
             c.fetch_status = "undecodable"
             continue
         fmt, w, h, img = dec
-        if fmt not in cfg.allowed_formats:
+        if fmt not in ALLOWED_FORMATS:
             c.fetch_status = "bad_format"
             continue
         ph = phash.phash64(img)
         feat = phash.image_feature(img)
         score = float(feat @ text_feature(c.caption))
-        if score < cfg.clip_threshold:
+        if score < CLIP_THRESHOLD:
             c.fetch_status = "low_score"
             continue
         c.fetch_status = "ok"

@@ -27,13 +27,13 @@ def test_two_phase_topk_equals_naive_single_window(spark):
         rows.append((url, host, budgets[host]))
     df = spark.createDataFrame(rows, "url string, host string, host_budget long")
 
-    cfg = EngineConfig(salt_buckets=8)
+    cfg = EngineConfig()
     scheduled, deferred = politeness_split(df, wave_no=3, cfg=cfg)
     got = sorted((r["host"], r["url"]) for r in scheduled.collect())
 
     from crawlingathome_worker_spark.operators.politeness import with_priority
 
-    naive = with_priority(df, 3, cfg)
+    naive = with_priority(df, 3)
     w = Window.partitionBy("host").orderBy("priority_key", "url")
     want = sorted(
         (r["host"], r["url"])

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from crawlingathome_worker_spark.sources.bucketed import (
     ensure_bucketed_pairs,
-    read_bucketed_pairs,
     write_bucketed_pairs,
 )
 
@@ -18,7 +17,7 @@ from crawlingathome_worker_spark.sources.bucketed import (
 def test_bucketed_join_skips_big_side_shuffle(spark, fx_dir):
     pairs = spark.read.parquet(f"{fx_dir}/pairs.parquet")
     write_bucketed_pairs(pairs, table="pairs_bucketed_test", buckets=8)
-    bucketed = read_bucketed_pairs(spark, "pairs_bucketed_test")
+    bucketed = spark.table("pairs_bucketed_test")
 
     scheduled = (
         spark.read.parquet(f"{fx_dir}/frontier_seed.parquet")

@@ -9,10 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlingathome_worker_spark.operators.components import (
-    component_keep_filter,
-    component_representatives,
+    component_members,
     connected_components,
 )
+from crawlingathome_worker_spark.session import release_checkpoint
 
 
 def _union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -76,14 +76,18 @@ def test_representatives_and_keep_filter(spark, fx_dir):
     edges = [(1, 2), (2, 3), (5, 6), (9, 9)]  # self-loop 9 drops out entirely
     df = spark.createDataFrame(edges, "a long, b long")
     comp = connected_components(df)
-    reps = {r["node"] for r in component_representatives(comp).collect()}
+    # each component is labelled by its min id: the kept representative
+    reps = {r["component"] for r in comp.collect()}
     assert reps == {1, 5}
 
+    # the cluster-based near-dup drop: anti-join the component_members drop set
     docs = spark.range(0, 8).select(F.col("id").alias("doc_id"), F.lit("t").alias("text"))
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
-    kept = component_keep_filter(docs, pairs, "doc_id")
+    members = component_members(pairs, "doc_a", "doc_b")
+    kept = docs.join(members.select(F.col("doc_a").alias("doc_id")), "doc_id", "left_anti")
     # members 2,3,6 dropped; roots 1,5 kept; singletons 0,4,7 untouched
     assert {r["doc_id"] for r in kept.collect()} == {0, 1, 4, 5, 7}
+    release_checkpoint(members)
 
 
 def test_non_star_guard_is_silent_on_real_runs(spark):
@@ -102,8 +106,6 @@ def test_non_star_guard_is_silent_on_real_runs(spark):
 
 
 def test_component_members_string_ids(spark):
-    from crawlingathome_worker_spark.operators.components import component_members
-
     pairs = spark.createDataFrame(
         [("img_b", "img_c"), ("img_a", "img_c"), ("img_x", "img_y")],
         "id_a string, id_b string",

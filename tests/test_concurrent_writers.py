@@ -8,10 +8,11 @@ its already-written-but-uncommitted data dirs stay invisible; a rerun resumes
 from the committed history and skips completed shards. The final warehouse
 content must equal a single-process run byte-for-row.
 
-Uses --plain-pairs: the bucketed store's INGEST is single-driver by ownership
-model (sources/bucketed.py) — concurrent drivers either share a pre-ingested
-table or take the plain path; the property under test here is the commit
-protocol, not the ingest."""
+Runs the multi-driver workflow the CLI documents: the bucketed store's INGEST
+is single-driver by ownership model (sources/bucketed.py), so one
+`--ingest-only` process buckets the pairs table first, and the solo run and
+both racing drivers then attach to that shared table. All drivers share one
+working directory, whose spark-warehouse holds the table."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_WAVES = 2
 
 
-def _launch(wh_dir: str, fx_dir: str) -> subprocess.Popen:
+def _launch(wh_dir: str, fx_dir: str, cwd: str, *extra: str) -> subprocess.Popen:
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     return subprocess.Popen(
         [
@@ -32,9 +33,9 @@ def _launch(wh_dir: str, fx_dir: str) -> subprocess.Popen:
             "--warehouse", wh_dir,
             "--fixtures", fx_dir,
             "--waves", str(N_WAVES),
-            "--plain-pairs",
+            *extra,
         ],
-        cwd=REPO,
+        cwd=cwd,
         env=env,
         stdout=subprocess.PIPE,
         stderr=subprocess.PIPE,
@@ -56,15 +57,21 @@ def _pairs_out_rows(spark, wh_dir: str):
 def test_two_racing_processes_commit_exactly_once(spark, fx_dir, tmp_path_factory):
     racing_wh = str(tmp_path_factory.mktemp("race_wh"))
     solo_wh = str(tmp_path_factory.mktemp("solo_wh"))
+    drivers = str(tmp_path_factory.mktemp("drivers"))
+
+    # one driver ingests the bucketed pairs table; every later driver attaches
+    ing = _launch(str(tmp_path_factory.mktemp("ingest_wh")), fx_dir, drivers, "--ingest-only")
+    out, err = ing.communicate(timeout=600)
+    assert ing.returncode == 0, f"ingest failed:\n{out}\n{err}"
 
     # reference: one uncontended process over the same shards
-    ref = _launch(solo_wh, fx_dir)
+    ref = _launch(solo_wh, fx_dir, drivers)
     out, err = ref.communicate(timeout=600)
     assert ref.returncode == 0, f"solo run failed:\n{out}\n{err}"
 
     # the race: both start together, both read latest()=None, both attempt
     # snapshot 0 — the hardlink commit lets exactly one win
-    p1, p2 = _launch(racing_wh, fx_dir), _launch(racing_wh, fx_dir)
+    p1, p2 = _launch(racing_wh, fx_dir, drivers), _launch(racing_wh, fx_dir, drivers)
     results = [p.communicate(timeout=600) for p in (p1, p2)]
     codes = [p1.returncode, p2.returncode]
     losers = sum(1 for c in codes if c != 0)
@@ -81,7 +88,7 @@ def test_two_racing_processes_commit_exactly_once(spark, fx_dir, tmp_path_factor
     for _ in range(4):
         if losers == 0:
             break
-        p = _launch(racing_wh, fx_dir)
+        p = _launch(racing_wh, fx_dir, drivers)
         out, err = p.communicate(timeout=600)
         if p.returncode == 0:
             losers -= 1

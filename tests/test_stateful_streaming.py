@@ -74,75 +74,3 @@ def test_host_quota_across_triggers(spark, tmp_path):
     # t2 admitted exactly one a.com row
     assert sum(1 for u in per_host["a.com"] if "/x" in u) == 1
 
-
-def test_host_quota_tws_equals_apply_in_pandas(spark, tmp_path):
-    """transformWithStateInPandas variant (Spark 4 typed-state API, RocksDB
-    store) must produce the same admitted set as applyInPandasWithState."""
-    import pytest as _pytest
-
-    from crawlingathome_worker_spark.streaming.stateful import (
-        HAS_TWS,
-        ROCKSDB_PROVIDER,
-        host_quota_limiter_tws,
-    )
-
-    if not HAS_TWS:
-        _pytest.skip(
-            "transformWithStateInPandas unavailable (no protobuf in container); "
-            "applyInPandasWithState above covers the quota semantics"
-        )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_batch(
-        src,
-        "b0.json",
-        [
-            {"host": h, "url": f"http://{h}/{i}", "priority_key": f"{i:02d}"}
-            for h, n in (("a.com", 2), ("b.com", 5))
-            for i in range(n)
-        ],
-        mtime=1_000_000_000,
-    )
-    _write_batch(
-        src,
-        "b1.json",
-        [
-            {"host": h, "url": f"http://{h}/x{i}", "priority_key": f"9{i}"}
-            for h in ("a.com", "b.com")
-            for i in range(4)
-        ],
-        mtime=1_000_000_100,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        schema = "host string, url string, priority_key string"
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        limited = host_quota_limiter_tws(stream, quota=QUOTA)
-        q = (
-            limited.writeStream.format("memory")
-            .queryName("quota_tws_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    per_host: dict[str, list[str]] = {}
-    for r in spark.sql("SELECT * FROM quota_tws_out").collect():
-        per_host.setdefault(r["host"], []).append(r["url"])
-    assert len(per_host["a.com"]) == QUOTA
-    assert len(per_host["b.com"]) == QUOTA
-    assert {u.rsplit("/", 1)[1] for u in per_host["b.com"]} == {"0", "1", "2"}
-    assert sum(1 for u in per_host["a.com"] if "/x" in u) == 1
