@@ -828,11 +828,7 @@ def q46_hashband_components(spark, sf_dir):
         .where(F.col("a") < F.col("b"))
         .distinct()
     )
-    comp = connected_components(edges)
-    # comp IS the (eagerly materialized) checkpoint — hand it to the driver
-    # as-is; releasing here would truncate the lineage under the pending
-    # compare. session.release_checkpoint(comp) is the receiving owner's cleanup call.
-    return comp.select(F.col("node").alias("doc_id"), "component")
+    return _local_components(connected_components(edges))
 
 
 def q47_neardup_components(spark, sf_dir):
@@ -842,9 +838,20 @@ def q47_neardup_components(spark, sf_dir):
     from crawlingathome_worker_spark.operators.components import connected_components
 
     pairs = q20_minhash_lsh_pairs(spark, sf_dir)
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    # see q46 — the result frame is the checkpoint; owner releases
-    return comp.select(F.col("node").alias("doc_id"), "component")
+    return _local_components(connected_components(pairs, src="doc_a", dst="doc_b"))
+
+
+def _local_components(comp: DataFrame) -> DataFrame:
+    """The (doc_id, component) labels of a `connected_components` result,
+    collected into a local frame (a few thousand rows at sf0.1) so the
+    result's checkpoint is released before returning."""
+    from crawlingathome_worker_spark.session import release_checkpoint
+
+    labels = comp.select(F.col("node").alias("doc_id"), "component")
+    try:
+        return comp.sparkSession.createDataFrame(labels.collect(), labels.schema)
+    finally:
+        release_checkpoint(comp)
 
 
 def q30_wave_flagship(spark, sf_dir):

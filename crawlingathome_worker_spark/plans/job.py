@@ -77,15 +77,27 @@ def run_job(
     return manifests
 
 
-
-
 def read_metrics(spark: SparkSession, wh: Warehouse) -> DataFrame:
-    """Tidy counters across ALL committed waves: (wave_no, counter,
-    partition_id, value). partition_id = -1 rows are wave totals; ≥ 0 rows are
-    the per-partition lineage (north_rule A1). The metrics table is
-    append-only, so this is one multi-dir parquet scan."""
-    df = wh.read_table(
-        spark, wh.latest(), "metrics",
-        "wave_no int, counter string, partition_id int, value long",
-    )
+    """Tidy counters of the committed waves: (wave_no, counter, partition_id,
+    value), read from the manifests, as Iceberg serves per-snapshot numbers
+    from snapshot metadata. partition_id = -1 rows are wave totals (the
+    `counters`, the `timing` totals, `bloom_fill_ppm`); ≥ 0 rows are the
+    per-partition `lineage` (north_rule A1). Manifests without `timing`
+    (maintenance snapshots, a seeded snapshot 0) are not waves and add no
+    rows. The view covers the snapshots `Warehouse.gc` kept."""
+    rows = []
+    for m in wh.committed():
+        if "timing" not in m:
+            continue
+        w, t = m["wave_no"], m["timing"]
+        totals = dict(m["counters"], prep_ms=round(t["prep_s"] * 1000),
+                      status_ms=round(t["status_s"] * 1000))
+        # a manifest written before a total existed reports no row for it
+        totals.update((k, t[k]) for k in ("codegen_compiles", "count_fallbacks") if k in t)
+        if "bloom_fill_ratio" in m:
+            totals["bloom_fill_ppm"] = round(m["bloom_fill_ratio"] * 1_000_000)
+        rows += [(w, k, -1, int(v)) for k, v in totals.items()]
+        for stage, parts in m["lineage"].items():
+            rows += [(w, stage, p["partition_id"], p["n"]) for p in parts]
+    df = spark.createDataFrame(rows, "wave_no int, counter string, partition_id int, value long")
     return df.orderBy("wave_no", "counter", "partition_id")

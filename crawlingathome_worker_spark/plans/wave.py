@@ -6,7 +6,7 @@ SURVEY.md §3 E1): each wave is ONE DataFrame DAG —
   frontier ∪ parse(new WAT) → cross-wave canonical dedup → seen-set anti-join
   → robots gate (broadcast) → politeness top-k per host → sample-id assignment
   → simulated fetch (join pairs) → batch decode + filters + CLIP-proxy score
-  → append output snapshot + overwrite state tables + lineage metrics → commit.
+  → append output snapshot + overwrite state tables + lineage counters → commit.
 
 State lives in warehouse tables, never in executor memory, so a wave is resumable
 from any committed snapshot (north_rule). Expected shuffles per wave (SURVEY.md §4):
@@ -21,16 +21,17 @@ keyed on; robots and id-offsets are broadcasts.
   state tables the wave writes;
 - execute (`_execute`): submit the jobs to a thread pool in stages and wait
   for the status counts;
-- gather (`_gather`): collect counters, lineage and bloom fill into the
-  manifest and write the metrics table;
+- gather (`_gather`): collect counters, lineage, bloom fill and timing into
+  the manifest, the wave's only record (`plans/job.py::read_metrics` reads
+  it back as a tidy frame);
 - commit (`_commit`): link the manifest.
 
 One resource owner, `_WaveLedger`, is created before anything is persisted.
 It owns the pool and the wave's job group, every persisted frame and every
 localCheckpoint (the new fold and the outgoing session cache), and releases
 each exactly once on one of three exits: commit, failure or a lost commit
-race. It also times every job and counts the wave's codegen compiles, so
-each committed manifest carries `timing` and the metrics table its totals.
+race. It also times every job and counts the wave's codegen compiles and
+counter fallbacks, so each committed manifest carries `timing`.
 """
 
 from __future__ import annotations
@@ -71,14 +72,14 @@ RETRY_SCHEMA = "pair_md5 string"
 BLOOM_WARN_FILL = 0.5
 
 
-def _obs_count(obs: Observation, df: DataFrame) -> int:
+def _obs_count(led: _WaveLedger, obs: Observation, df: DataFrame) -> int:
     """Observation value with a count() fallback: when a wave's sub-plan is
     empty, AQE may replace the observed subtree with an empty LocalTableScan
     and the observation row never materializes cleanly."""
     try:
         return int(obs.get["n"])
     except Exception:
-        return df.count()
+        return led.recount(df)
 
 
 def _fold_ckpt(df: DataFrame) -> DataFrame:
@@ -130,22 +131,23 @@ class _WaveLedger:
 
     Every job runs through `run` (caller's thread) or `submit` (pool), which
     record its start offset and duration in `timing` next to the phase
-    times (`phase`) and the codegen compiles (`count_compiles`)."""
+    times (`phase`), the codegen compiles (`count_compiles`) and the
+    counters recomputed with count() (`recount`)."""
 
     def __init__(self, spark: SparkSession, wh: Warehouse):
         self.spark, self.wh = spark, wh
         self.compiles0 = codegen_compiles(spark)
         self.t0 = self._mark = time.perf_counter()
-        self.timing: dict = {"jobs": {}}
+        self.timing: dict = {"jobs": {}, "count_fallbacks": 0}
         self.frames: list[DataFrame] = []
         self.pool: ThreadPoolExecutor | None = None
         self.group = self.desc = ""
         self.fold_future: Future | None = None
-        # Every job except the metrics write has the cached session bloom
-        # frame somewhere in its lineage (the seen gate feeds everything).
-        # Tracking them lets `fail` tell a GENUINE cache-reader failure
-        # (possible lost checkpoint blocks) from a driver-side failure that
-        # cannot have touched them (ADVICE r4 — scope the cache eviction).
+        # Every job has the cached session bloom frame somewhere in its
+        # lineage (the seen gate feeds everything). Tracking them lets `fail`
+        # tell a GENUINE cache-reader failure (possible lost checkpoint
+        # blocks) from a driver-side failure that cannot have touched them
+        # (ADVICE r4 — scope the cache eviction).
         self.readers: list[Future] = []
         self.reader_failed = False
 
@@ -160,12 +162,17 @@ class _WaveLedger:
         self.timing[f"{name}_s"] = round(now - self._mark, 4)
         self._mark = now
 
-    def count_compiles(self) -> int:
+    def count_compiles(self) -> None:
         """Record in `timing` the whole-stage-codegen compiles since the wave
         started. The counter is JVM-wide, so a concurrent query or wave in
         the same driver adds to it."""
-        n = self.timing["codegen_compiles"] = codegen_compiles(self.spark) - self.compiles0
-        return n
+        self.timing["codegen_compiles"] = codegen_compiles(self.spark) - self.compiles0
+
+    def recount(self, df: DataFrame) -> int:
+        """count() a counter's frame because its observed value is missing
+        or implausible, and count the fallback in `timing`."""
+        self.timing["count_fallbacks"] += 1
+        return df.count()
 
     def _timed(self, label: str, fn, *a, **k):
         s = time.perf_counter()
@@ -189,7 +196,7 @@ class _WaveLedger:
         self.group, self.desc = f"wave-{snap_id}", f"wave {wave_no}"
         self.pool = ThreadPoolExecutor(max_workers=8)
 
-    def submit(self, label: str, fn, *a, reads_cache: bool = True) -> Future:
+    def submit(self, label: str, fn, *a) -> Future:
         """Run fn(*a) as a pool job under the wave's job group, so a failed
         wave can cancel its in-flight siblings (Spark job groups are
         thread-local — each pool thread sets it before its action)."""
@@ -199,8 +206,7 @@ class _WaveLedger:
             return self._timed(label, fn, *a)
 
         fut = self.pool.submit(job)
-        if reads_cache:
-            self.readers.append(fut)
+        self.readers.append(fut)
         return fut
 
     def fold(self, df: DataFrame) -> None:
@@ -234,7 +240,7 @@ class _WaveLedger:
         # on this Warehouse would hit the same snapshot key and reuse them
         # until the process restarted — drop the cache so the retry rebuilds
         # from the durable base+delta tables (ADVICE r3). SCOPED (ADVICE r4):
-        # a driver-side failure (metrics write error, Ctrl-C) cannot corrupt
+        # a driver-side failure (a gather-side error, Ctrl-C) cannot corrupt
         # immutable cached blocks, and evicting there forces the retry to
         # re-pay the full refold for nothing. A genuine reader failure racing
         # the cancel can be missed at most once, and self-heals: the retry's
@@ -507,9 +513,8 @@ def _plan_state_writes(
 
 
 def _execute(led: _WaveLedger, w: _WavePlan) -> dict:
-    """Pool-execute: submit every job but the metrics write; → their futures
-    by name, the status counts, and the session cache to re-key when the
-    wave folds nothing.
+    """Pool-execute: submit every job; → their futures by name, the status
+    counts, and the session cache to re-key when the wave folds nothing.
 
     ONE pool, STAGED submission (concurrent Spark jobs from driver threads):
     at bench scale a committed wave is otherwise dominated by 5-7 small
@@ -538,8 +543,7 @@ def _execute(led: _WaveLedger, w: _WavePlan) -> dict:
     an unregistered orphan dir — the same invisible-until-committed lifecycle
     as a failed wave's files. Drain waves (no WAT input) keep the post-status
     submission so provably-empty waves still skip state writes entirely.
-    Lineage submits when status resolves; the metrics write (gather) further
-    needs the observe() values carried by the frontier write."""
+    Lineage submits when status resolves."""
     wh, cfg, snap = w.wh, w.cfg, w.manifest["snapshot_id"]
     led.phase("prep")
     led.open_pool(snap, w.manifest["wave_no"])
@@ -592,8 +596,8 @@ def _execute(led: _WaveLedger, w: _WavePlan) -> dict:
             led.fold(w.bloom_p)
     # bloom saturation health (VERDICT r4 item 3): an over-filled bloom
     # silently raises FPR and a false "seen" silently drops candidates
-    # forever, so saturation must surface in metrics. The popcount is a full
-    # scan of the bloom bits on the serialized fold→fill→metrics tail
+    # forever, so saturation must surface in the manifest. The popcount is a
+    # full scan of the bloom bits on the serialized fold→fill tail
     # (profiled: ~0.4 s at bench scale, a full multi-GB state scan at design
     # point) — so recompute EXACTLY only at compaction boundaries (and on the
     # first state-writing wave, when no parent value exists); every other
@@ -612,9 +616,9 @@ def _execute(led: _WaveLedger, w: _WavePlan) -> dict:
 
 
 def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
-    """Gather: fill the manifest from the jobs' results and write the metrics
-    table; → the next session-cache frame (None in exact mode)."""
-    manifest, tables, cfg, wave_no = w.manifest, w.manifest["tables"], w.cfg, w.manifest["wave_no"]
+    """Gather: fill the manifest from the jobs' results; → the next
+    session-cache frame (None in exact mode)."""
+    manifest, tables, cfg = w.manifest, w.manifest["tables"], w.cfg
     status = jobs["status"]
     n_scheduled, n_errors, n_ok = sum(status.values()), status.get("error", 0), status.get("ok", 0)
 
@@ -624,10 +628,10 @@ def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
     # materialized under whichever stage-A job won the cache race.
     tables["frontier"] = [jobs["frontier"].result()]
     counters = {
-        "candidates": _obs_count(w.obs["cands"], w.cands),
-        "unseen": _obs_count(w.obs["unseen"], w.unseen),
+        "candidates": _obs_count(led, w.obs["cands"], w.cands),
+        "unseen": _obs_count(led, w.obs["unseen"], w.unseen),
         "scheduled": n_scheduled,
-        "deferred": _obs_count(w.obs["deferred"], w.deferred),
+        "deferred": _obs_count(led, w.obs["deferred"], w.deferred),
         "fetched_ok": n_ok,
         "rejected": n_scheduled - n_ok - n_errors,
         "errors": n_errors,
@@ -649,20 +653,19 @@ def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
     # falsely trip the fallback — and would already duplicate output
     # sample_ids, a corruption upstream of any counter).
     if not counters["candidates"] >= counters["unseen"] >= n_scheduled + counters["deferred"]:
-        counters["candidates"] = w.cands.count()
-        counters["unseen"] = w.unseen.count()
-        counters["deferred"] = w.deferred.count()
+        counters["candidates"] = led.recount(w.cands)
+        counters["unseen"] = led.recount(w.unseen)
+        counters["deferred"] = led.recount(w.deferred)
     manifest["counters"] = counters
     if "lineage" in jobs:
         manifest["lineage"] = {stage: f.result() for stage, f in jobs["lineage"].items()}
 
-    # bloom saturation: gather the fill ratio so it rides BOTH the manifest
-    # and the metrics table; waves that leave the bloom state untouched
-    # carry the parent's value forward (still current).
+    # bloom saturation: gather the fill ratio into the manifest; waves that
+    # leave the bloom state untouched carry the parent's value forward (still
+    # current).
     fill = jobs["fill"].result() if "fill" in jobs else w.parent_fill
     if fill is not None:
-        fill = round(float(fill), 6)  # one rounding, shared by manifest + ppm row
-        manifest["bloom_fill_ratio"] = fill
+        fill = manifest["bloom_fill_ratio"] = round(float(fill), 6)
         if fill > BLOOM_WARN_FILL:
             logging.getLogger(__name__).warning(
                 "parsed bloom fill ratio %.3f exceeds %.2f — the filter is "
@@ -680,36 +683,16 @@ def _gather(led: _WaveLedger, w: _WavePlan, jobs: dict) -> DataFrame | None:
             not cfg.reference_strict and n_errors > 0
         )
 
-    # metrics table: totals (partition_id = -1) + per-partition lineage rows
-    # (north_rule: per-partition fetched/filtered/rejected counters); needs
-    # the gathered counters, overlaps the remaining tail. The compile count
-    # is taken here, so it covers the plan and stage A, and of stage B what
-    # compiled by now (a warm wave's compiles all fall in its prep).
-    t = led.timing
-    metric_rows = [(wave_no, k, -1, int(v)) for k, v in counters.items()]
-    metric_rows += [
-        (wave_no, "prep_ms", -1, round(t["prep_s"] * 1000)),
-        (wave_no, "status_ms", -1, round(t["status_s"] * 1000)),
-        (wave_no, "codegen_compiles", -1, led.count_compiles()),
-    ]
-    if fill is not None:
-        metric_rows.append((wave_no, "bloom_fill_ppm", -1, int(round(fill * 1_000_000))))
-    for stage, parts in manifest.get("lineage", {}).items():
-        metric_rows += [(wave_no, stage, p["partition_id"], p["n"]) for p in parts]
-    metrics = led.spark.createDataFrame(
-        metric_rows, "wave_no int, counter string, partition_id int, value long"
-    )
-    f_metrics = led.submit(
-        "metrics", w.wh.write_table, metrics, "metrics", manifest["snapshot_id"],
-        reads_cache=False,  # driver-built rows — never touches the cache
-    )
+    # The compile count is taken here, so it covers the plan and stage A,
+    # and of stage B what compiled by now (a warm wave's compiles all fall
+    # in its prep).
+    led.count_compiles()
 
     tables.setdefault("pairs_out", []).append(jobs["pairs_out"].result())
     for fut, setter in jobs["state"]:
         setter(fut.result())
     for fut in jobs["orphans"]:
         fut.result()
-    tables.setdefault("metrics", []).append(f_metrics.result())
     cache_df = led.fold_future.result() if led.fold_future is not None else jobs["cache"]
     led.phase("gather")  # the commit cannot time itself into the manifest it writes
     manifest["timing"] = led.timing

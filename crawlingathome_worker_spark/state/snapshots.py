@@ -17,9 +17,9 @@ Manifest shape:
 }
 
 A table is OVERWRITE-versioned (frontier, seen_keys, retry_keys, bloom, cuckoo):
-the manifest points at exactly one directory. `pairs_out` and `metrics` are
-APPEND tables: the manifest carries the full list of data directories, so a read
-is a multi-path parquet scan and an uncommitted wave's files are simply invisible
+the manifest points at exactly one directory. `pairs_out` is an APPEND table:
+the manifest carries the full list of data directories, so a read is a
+multi-path parquet scan and an uncommitted wave's files are simply invisible
 (crash-safe exactly-once, replacing the reference's wipe-and-rerun idempotence,
 crawlingathome.py:221-225).
 """
@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-APPEND_TABLES = frozenset({"pairs_out", "metrics"})
+APPEND_TABLES = frozenset({"pairs_out"})
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -103,9 +103,12 @@ class Warehouse:
     def gc(self, keep_last: int = 2, grace_seconds: float = 3600.0) -> list[str]:
         """Expire old snapshots (Iceberg `expireSnapshots` analog): keep the
         newest `keep_last` manifests, delete every table directory no kept
-        manifest references, then drop the expired manifests. Append tables
-        (pairs_out/metrics) survive automatically — the latest manifest
-        carries their full directory history. Returns the deleted rel paths.
+        manifest references, then drop the expired manifests. The append table
+        (pairs_out) survives automatically — the latest manifest carries its
+        full directory history. Returns the deleted rel paths. The expired
+        manifests take their waves' counters, lineage and timing with them,
+        so `plans/job.py::read_metrics` then covers only the kept snapshots,
+        as Iceberg's `snapshots` metadata table does.
 
         Safe vs concurrent readers of the KEPT snapshots only — like Iceberg,
         expiring a snapshot invalidates time travel to it. Directories younger

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     ap = argparse.ArgumentParser(description="PySpark URL-frontier worker")
-    ap.add_argument("--warehouse", required=True, help="snapshot warehouse root")
+    ap.add_argument("--warehouse", help="snapshot warehouse root (not with --ingest-only)")
     ap.add_argument("--fixtures", default=None, help="fixture dir (default: generate)")
     ap.add_argument("--fixture-scale", type=float, default=1.0)
     ap.add_argument("--waves", type=int, default=2, help="WAT shards to process")
@@ -56,7 +56,8 @@ def main() -> None:
     )
     ap.add_argument(
         "--stats", action="store_true",
-        help="print per-wave counter totals from the metrics table",
+        help="print per-wave counter totals from the committed manifests "
+        "(before --compact and --gc, so every wave this run committed shows)",
     )
     ap.add_argument(
         "--finalize", default=None, metavar="PATH",
@@ -74,6 +75,8 @@ def main() -> None:
         "(keep exactly the min-id member of each cluster)",
     )
     args = ap.parse_args()
+    if args.warehouse is None and not args.ingest_only:
+        ap.error("--warehouse is required unless --ingest-only")
 
     from pyspark.sql import functions as F
 
@@ -93,7 +96,6 @@ def main() -> None:
         dedup_mode=args.dedup_mode,
         reference_strict=args.reference_strict,
     )
-    wh = Warehouse(args.warehouse)
     links = spark.read.parquet(os.path.join(fx, "wat_links.parquet"))
     pairs_path = os.path.join(fx, "pairs.parquet")
     # one-time bucketed ingest (or attach to the table a previous --ingest-only
@@ -109,6 +111,7 @@ def main() -> None:
                           "buckets": args.buckets}))
         spark.stop()
         return
+    wh = Warehouse(args.warehouse)
     if args.robots_txt:
         # real-world path: raw fetched robots.txt bodies (host, body) parsed
         # to gate-ready rules in-process (pinned RFC 9309 subset —
@@ -133,6 +136,12 @@ def main() -> None:
         print(json.dumps({"resumed": True, "shards_skipped": n_skipped}))
     for m in manifests:
         print(json.dumps({"wave": m["wave_no"], **m["counters"]}))
+    if args.stats:
+        from crawlingathome_worker_spark.plans.job import read_metrics
+
+        totals = read_metrics(spark, wh).filter("partition_id = -1").collect()
+        for r in totals:
+            print(json.dumps({"wave": r["wave_no"], r["counter"]: r["value"]}))
     if args.compact:
         m = wh.compact_appends(spark, "pairs_out")
         if m is not None:
@@ -140,12 +149,6 @@ def main() -> None:
     if args.gc > 0:
         deleted = wh.gc(keep_last=args.gc)
         print(json.dumps({"gc_kept": args.gc, "dirs_deleted": len(deleted)}))
-    if args.stats:
-        from crawlingathome_worker_spark.plans.job import read_metrics
-
-        totals = read_metrics(spark, wh).filter("partition_id = -1").collect()
-        for r in totals:
-            print(json.dumps({"wave": r["wave_no"], r["counter"]: r["value"]}))
     if args.finalize:
         from crawlingathome_worker_spark.plans.dataset import write_training_set
 

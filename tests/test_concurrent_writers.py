@@ -24,13 +24,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_WAVES = 2
 
 
-def _launch(wh_dir: str, fx_dir: str, cwd: str, *extra: str) -> subprocess.Popen:
+def _launch(wh_dir: str | None, fx_dir: str, cwd: str, *extra: str) -> subprocess.Popen:
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     return subprocess.Popen(
         [
             sys.executable,
             os.path.join(REPO, "run_frontier.py"),
-            "--warehouse", wh_dir,
+            *(["--warehouse", wh_dir] if wh_dir else []),
             "--fixtures", fx_dir,
             "--waves", str(N_WAVES),
             *extra,
@@ -59,8 +59,9 @@ def test_two_racing_processes_commit_exactly_once(spark, fx_dir, tmp_path_factor
     solo_wh = str(tmp_path_factory.mktemp("solo_wh"))
     drivers = str(tmp_path_factory.mktemp("drivers"))
 
-    # one driver ingests the bucketed pairs table; every later driver attaches
-    ing = _launch(str(tmp_path_factory.mktemp("ingest_wh")), fx_dir, drivers, "--ingest-only")
+    # one driver ingests the bucketed pairs table (it needs no snapshot
+    # warehouse); every later driver attaches
+    ing = _launch(None, fx_dir, drivers, "--ingest-only")
     out, err = ing.communicate(timeout=600)
     assert ing.returncode == 0, f"ingest failed:\n{out}\n{err}"
 

@@ -92,3 +92,18 @@ def test_q44_leaves_no_sink_table_or_checkpoint(spark):
     assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("q44_sink_")]
     assert set(glob.glob(os.path.join(tempfile.gettempdir(), "q44_ckpt_*"))) == ckpts
     assert not [q.name for q in spark.streams.active]
+
+
+@pytest.mark.parametrize("name", ["q46_hashband_components", "q47_neardup_components"])
+def test_component_queries_release_their_checkpoint(spark, name):
+    """connected_components returns a live localCheckpoint; the query hands
+    the driver a local frame and releases it, so collecting the result leaves
+    no persisted RDD behind. Compared as id sets: Spark's ContextCleaner may
+    drop an earlier test's RDD meanwhile."""
+    def persistent():
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persistent()
+    rows = entrymod.queries()[name](spark, SF_DIR).collect()
+    assert rows
+    assert persistent() - before == set()

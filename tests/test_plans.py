@@ -361,6 +361,9 @@ def test_wave_job_budget(spark, fx_dir, tmp_path):
 
 
 def test_read_metrics_tidy(spark, fx_dir, tmp_path):
+    """read_metrics is a view over the committed manifests: wave totals and
+    per-partition lineage rows, no rows for maintenance snapshots, and after
+    gc only the kept waves. No wave writes a second record of them."""
     from crawlingathome_worker_spark.plans.job import read_metrics, run_job
     from crawlingathome_worker_spark.state.snapshots import Warehouse
 
@@ -369,14 +372,65 @@ def test_read_metrics_tidy(spark, fx_dir, tmp_path):
     links = spark.read.parquet(f"{fx_dir}/wat_links.parquet").filter("page_id < 60")
     pairs = spark.read.parquet(f"{fx_dir}/pairs.parquet")
     robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
-    run_job(spark, wh, cfg, [links, links], pairs, robots)
-    m = read_metrics(spark, wh)
-    rows = m.collect()
-    waves = {r["wave_no"] for r in rows}
-    assert waves == {1, 2}
-    counters = {r["counter"] for r in rows if r["partition_id"] == -1}
-    assert {"candidates", "scheduled", "deferred", "fetched_ok"} <= counters
-    # totals match the committed manifests
-    want = wh.latest()["counters"]["scheduled"]
-    got = [r["value"] for r in rows if r["wave_no"] == 2 and r["counter"] == "scheduled" and r["partition_id"] == -1]
-    assert got == [want]
+    run_job(spark, wh, cfg, [links, links], pairs, robots, collect_lineage=True)
+    committed = wh.committed()
+    for man in committed:
+        assert "metrics" not in man["tables"]
+        assert "metrics" not in man["timing"]["jobs"]
+
+    def table():
+        return {(r["wave_no"], r["counter"], r["partition_id"], r["value"])
+                for r in read_metrics(spark, wh).collect()}
+
+    rows = table()
+    assert {r[0] for r in rows} == {1, 2}
+    totals = {(w, c): v for w, c, p, v in rows if p == -1}
+    for man in committed:
+        w = man["wave_no"]
+        assert {(w, c): v for c, v in man["counters"].items()}.items() <= totals.items()
+        assert totals[(w, "codegen_compiles")] == man["timing"]["codegen_compiles"]
+        assert totals[(w, "count_fallbacks")] == 0
+    # the per-partition rows are exactly the manifests' lineage
+    lineage = {
+        (man["wave_no"], stage, p["partition_id"], p["n"])
+        for man in committed for stage, parts in man["lineage"].items() for p in parts
+    }
+    assert lineage and {r for r in rows if r[2] >= 0} == lineage
+
+    # expiring snapshot 1 drops wave 1's rows; a maintenance snapshot adds none
+    wh.gc(keep_last=1, grace_seconds=0)
+    kept = {r for r in rows if r[0] == 2}
+    assert table() == kept
+    assert wh.compact_appends(spark, "pairs_out") is not None
+    assert table() == kept
+
+
+def test_counter_fallback_is_counted(spark, fx_dir, tmp_path, monkeypatch):
+    """When no observation can be read, the wave recounts candidates, unseen
+    and deferred with count(): the same counters, and three counted
+    fallbacks in its timing and in read_metrics."""
+    from pyspark.sql import Observation
+
+    from crawlingathome_worker_spark.plans.job import read_metrics
+    from crawlingathome_worker_spark.plans.wave import run_wave
+    from crawlingathome_worker_spark.state.snapshots import Warehouse
+
+    cfg = EngineConfig(default_host_budget=10, dedup_mode="bloom")
+    links = spark.read.parquet(f"{fx_dir}/wat_links.parquet").filter("page_id < 60")
+    pairs = spark.read.parquet(f"{fx_dir}/pairs.parquet")
+    robots = spark.read.parquet(f"{fx_dir}/robots.parquet")
+
+    plain = run_wave(spark, Warehouse(str(tmp_path / "plain")), cfg, pairs, robots, links)
+    assert plain["timing"]["count_fallbacks"] == 0
+
+    def unreadable(self):
+        raise RuntimeError("observation not materialized")
+
+    wh = Warehouse(str(tmp_path / "fallback"))
+    with monkeypatch.context() as mp:
+        mp.setattr(Observation, "get", property(unreadable))
+        m = run_wave(spark, wh, cfg, pairs, robots, links)
+    assert m["counters"] == plain["counters"]
+    assert m["timing"]["count_fallbacks"] == 3
+    got = read_metrics(spark, wh).filter("counter = 'count_fallbacks'").collect()
+    assert [(r["wave_no"], r["partition_id"], r["value"]) for r in got] == [(1, -1, 3)]

@@ -36,9 +36,9 @@ def test_a_warm_wave_reuses_generated_code(spark, fx_dir, tmp_path):
         compiles.append(codegen_compiles(spark) - before)
     assert compiles[2] <= WARM_WAVE_MAX_COMPILES, compiles
 
-    # each wave explains its cost: the manifest counts the compiles up to the
-    # metrics write (so at most the whole wave's), and the metrics table
-    # carries them with the phase times as wave totals
+    # each wave explains its cost: the manifest counts the compiles up to
+    # gather (so at most the whole wave's), and read_metrics reports them
+    # with the phase times as wave totals
     recorded = [m["timing"]["codegen_compiles"] for m in manifests]
     assert recorded[0] > 0
     assert all(0 <= r <= c for r, c in zip(recorded, compiles)), (recorded, compiles)

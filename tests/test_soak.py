@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crawlingathome_worker_spark.config import EngineConfig
+from crawlingathome_worker_spark.plans.job import read_metrics
 from crawlingathome_worker_spark.plans.wave import BLOOM_WARN_FILL, run_wave
 from crawlingathome_worker_spark.state.snapshots import Warehouse
 
@@ -100,18 +101,22 @@ def test_failed_wave_releases_all_state(spark, fx_dir, tmp_path_factory):
 
     import pytest
 
-    real_write = wh.write_table
+    # 1) DRIVER-SIDE failure: gather's codegen-compile count (the ledger's
+    # second call) runs on the driver and never reads the cached bloom
+    # frame, so its failure cannot have broken the checkpoint blocks — the
+    # wave fails, strands nothing, and KEEPS the session cache so the retry
+    # skips the base+delta refold (ADVICE r4)
+    from crawlingathome_worker_spark.plans import wave as wave_mod
 
-    # 1) DRIVER-SIDE failure: the metrics write is built from driver rows and
-    # never reads the cached bloom frame, so its failure cannot have broken
-    # the checkpoint blocks — the wave fails, strands nothing, and KEEPS the
-    # session cache so the retry skips the base+delta refold (ADVICE r4)
-    def failing_metrics_write(df, name, snap_id):
-        if name == "metrics":
-            raise RuntimeError("injected write failure")
-        return real_write(df, name, snap_id)
+    real_compiles, calls = wave_mod.codegen_compiles, []
 
-    wh.write_table = failing_metrics_write
+    def failing_compiles(session):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected gather failure")
+        return real_compiles(session)
+
+    wave_mod.codegen_compiles = failing_compiles
     try:
         with pytest.raises(RuntimeError, match="injected"):
             run_wave(
@@ -119,7 +124,8 @@ def test_failed_wave_releases_all_state(spark, fx_dir, tmp_path_factory):
                 links.limit(0), collect_lineage=False, shard_key="b",
             )
     finally:
-        wh.write_table = real_write
+        wave_mod.codegen_compiles = real_compiles
+    assert len(calls) == 2
 
     assert getattr(wh, "_bloom_session_cache", None) is not None
     now = _persistent_ids(spark)
@@ -130,6 +136,8 @@ def test_failed_wave_releases_all_state(spark, fx_dir, tmp_path_factory):
     # seen gate (and so through the cached frame) fails AFTER materializing —
     # the blocks may be broken (ADVICE r3), so the cache MUST be evicted and
     # its checkpoint blocks actually unpersisted
+    real_write = wh.write_table
+
     def failing_reader_write(df, name, snap_id):
         rel = real_write(df, name, snap_id)  # materialize first: a real read
         if name == "bloom_parsed_delta":
@@ -212,7 +220,7 @@ def test_bloom_fill_ratio_emitted_and_warns_when_saturated(
     spark, fx_dir, tmp_path_factory, caplog
 ):
     """VERDICT r4 item 3: every committed bloom wave must surface the parsed
-    bloom's fill ratio (manifest + metrics table), and a filter pushed past
+    bloom's fill ratio (manifest + read_metrics), and a filter pushed past
     its design capacity must WARN — at design scale a saturating bloom
     silently raises FPR and silently drops candidates as false "seen"."""
     import logging
@@ -245,7 +253,9 @@ def test_bloom_fill_ratio_emitted_and_warns_when_saturated(
 
     merged = bloom_add(state, deltas, cfg.bloom, key="pair_md5") if deltas is not None else state
     assert abs(bloom_fill_ratio(merged, cfg.bloom) - fill) < 1e-6
-    rows = wh.read_table(spark, m, "metrics").filter("counter = 'bloom_fill_ppm'").collect()
+    rows = read_metrics(spark, wh).filter(
+        f"wave_no = {m['wave_no']} AND counter = 'bloom_fill_ppm'"
+    ).collect()
     assert [r["value"] for r in rows] == [int(round(fill * 1_000_000))]
     assert not any("fill ratio" in r.getMessage() for r in caplog.records)
 
@@ -432,7 +442,7 @@ def test_every_committed_wave_carries_timing(spark, fx_dir, tmp_path_factory):
             phases = [t["prep_s"], t["status_s"], t["gather_s"]]
             assert min(phases) >= 0.0
             jobs = t["jobs"]
-            assert {"sample_ids", "frontier", "pairs_out", "status", "metrics"} <= set(jobs)
+            assert {"sample_ids", "frontier", "pairs_out", "status"} <= set(jobs)
             if mode == "exact":
                 assert {"seen_keys", "retry_keys"} <= set(jobs)
             elif m["shard_key"] is not None:
